@@ -253,6 +253,11 @@ def sf1_crossover(spark, base_dir: str) -> dict:
             "speedup_hi_over_lo": round(lo["gate_wave_sec"] / best, 3)
             if best else None,
         }
+    except subprocess.CalledProcessError as e:
+        # the child's own traceback is the cause; the command line and
+        # exit code alone say nothing about why the wave failed
+        tail = (e.stderr or "").strip()[-400:]
+        out["scaling"] = {"error": f"gate_wave.py exit {e.returncode}: {tail}"}
     except Exception as e:  # noqa: BLE001
         out["scaling"] = {"error": str(e)[:200]}
     return out

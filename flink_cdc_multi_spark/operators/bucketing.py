@@ -42,7 +42,7 @@ def bucket_layout(df: DataFrame) -> tuple[list[str], int] | None:
     is a bucketed file scan with the same spec, else None.
 
     This is how operators make join ORDER partitioning-aware: the r10
-    layout experiment (PERF.md, tools/layout_bucketed_join.py) measured
+    layout experiment (PERF.md "r10 bucketed-layout experiment") measured
     that q27's shipped join order on orderkey-bucketed lineitem is WORSE
     than the unbucketed fixture (4.96 s vs 3.66 s at sf10 — the suppkey
     join shuffles lineitem first and destroys the partitioning before it

@@ -865,7 +865,6 @@ def contamination_report(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    shingle_key=None,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any word
     n-gram shingle with a probe set (eval benchmarks, held-out suites) —
@@ -897,17 +896,13 @@ def contamination_report(
     (string shuffles) → 9.4 s (compact two-level) → this single-shuffle
     form on 26M shingles at sf10."""
 
-    # r17 fast lane: xxhash64 replaces md5-hash60 as the shingle identity
-    # (the transform lambda is interpreted per element — one JVM hash call
-    # beats interpreted md5 + substring + base-16 conv; the DuckDB oracle
-    # replays it via the generated XXH64 chain per DISTINCT shingle).
-    # Override via ``shingle_key`` (the md5-hash60 legacy lane is
-    # F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("bigint")).
-    key = shingle_key if shingle_key is not None else (lambda c: F.xxhash64(c))
-
+    # xxhash64 is the shingle identity (the transform lambda is
+    # interpreted per element — one JVM hash call beats interpreted md5 +
+    # substring + base-16 conv; the DuckDB oracle replays it via the
+    # generated XXH64 chain per DISTINCT shingle)
     def distinct_hash_rows(d: DataFrame) -> DataFrame:
         tok = _token_barrier(d, id_col, text_col)
-        hs = F.array_distinct(F.transform(_shingle_array(n), key))
+        hs = F.array_distinct(F.transform(_shingle_array(n), lambda c: F.xxhash64(c)))
         return tok.select("id", F.explode(hs).alias("h"))
 
     c = distinct_hash_rows(corpus)
@@ -1061,9 +1056,6 @@ def drop_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    freq_broadcast: bool = False,
-    window_key=None,
-    onepass: bool = True,
 ) -> DataFrame:
     """Span REMOVAL (r14, VERDICT r13 item 3) — the surgery half of the
     Lee et al. 2022 exact-substring pipeline (arXiv:2107.06499 §3):
@@ -1074,10 +1066,10 @@ def drop_duplicate_spans(
     Contract (mirrored verbatim in the DuckDB oracle):
     - windows are the spans signal's positional n-token windows
       (_shingle_array: duplicates kept; docs with < n tokens contribute
-      ONE whole-text window), identified by xxhash64 (r17 fast lane —
-      the md5-hash60 form paid md5 + base-16 conv per window, ABAB in
-      tools/opt_r17_abab_xxh.py; override via ``window_key``) — the
-      contamination hash contract, both sides move together;
+      ONE whole-text window), identified by xxhash64 (the md5-hash60
+      form paid md5 + base-16 conv per window, PERF.md "r17
+      OPTIMIZATION wave 7") — the contamination hash contract, both
+      sides move together;
     - the CANONICAL occurrence of a window is the globally first by
       (doc_id, pos) — min(struct(id, pos)), a partial-agg reduction,
       never a row_number window (the materialization skew rule);
@@ -1092,22 +1084,18 @@ def drop_duplicate_spans(
       earlier doc holds the window; cross-doc, only the earliest doc's
       first occurrence survives.
 
-    Scale shape (``onepass=True``, r17 optimization round wave 8): the
-    window stream is derived ONCE and repartitioned on the 8-byte hash —
-    the frequency aggregate and the join probe both consume that single
-    exchange (runtime ReusedExchange; the old shape re-derived the whole
-    tokenize+shingle+hash Generate subtree for each consumer, and at
-    100 TB each re-derivation is a full corpus pass), the canonical-pick
-    agg rides the exchange's partitioning (no second window exchange),
-    and the h join is an exchange-free in-partition shuffled-hash join
-    (build = the ≤|distinct h| freq side). ``onepass=False`` keeps the
-    r14 commonness topology (freq aggregated map-side then
-    broadcast-when-small via ``freq_broadcast``, probe re-derived) —
-    the ABAB lane. Both forms: one doc-keyed removal-set agg and a
-    doc-local array rebuild — the TEXT never shuffles with the windows,
-    only (id, pos, h) triples do, and the rebuild's filter lambda runs
-    on the already-materialized token array behind the Generate barrier."""
-    key = window_key if window_key is not None else (lambda c: F.xxhash64(c))
+    Scale shape: the window stream is derived ONCE and repartitioned on
+    the 8-byte hash — the frequency aggregate and the join probe both
+    consume that single exchange (runtime ReusedExchange; a shape that
+    re-derives the whole tokenize+shingle+hash Generate subtree for each
+    consumer pays a full corpus pass per re-derivation at 100 TB), the
+    canonical-pick agg rides the exchange's partitioning (no second
+    window exchange), and the h join is an exchange-free in-partition
+    shuffled-hash join (build = the ≤|distinct h| freq side). Then one
+    doc-keyed removal-set agg and a doc-local array rebuild — the TEXT
+    never shuffles with the windows, only (id, pos, h) triples do, and
+    the rebuild's filter lambda runs on the already-materialized token
+    array behind the Generate barrier."""
     tok = _token_barrier(
         df.filter(F.col(text_col).isNotNull()), id_col, text_col
     )
@@ -1117,30 +1105,24 @@ def drop_duplicate_spans(
             F.size("toks").alias("n_toks"),
             F.posexplode(_shingle_array(n)).alias("pos", "s"),
         )
-        .select("id", "n_toks", "pos", key(F.col("s")).alias("h"))
+        .select("id", "n_toks", "pos", F.xxhash64(F.col("s")).alias("h"))
+        .repartition(F.col("h"))
     )
-    if onepass:
-        w = w.repartition(F.col("h"))
     # the canonical struct carries n_toks as a THIRD field purely so the
     # freq branch reads every column of w: column pruning would otherwise
     # project n_toks away below the repartition exchange, making the two
-    # w subtrees differ and defeating ReuseExchange (the whole point of
-    # onepass — verified on the explain dump: pruned = two Generate
-    # chains, aligned = one chain + ReusedExchange). (id, pos) is unique
-    # per occurrence, so the extra field can never change the min.
+    # w subtrees differ and defeating ReuseExchange (verified on the
+    # explain: pruned = two Generate chains, aligned = one chain +
+    # ReusedExchange). (id, pos) is unique per occurrence, so the extra
+    # field can never change the min. Both join children already carry
+    # the w exchange's hashpartitioning(h); the hint picks the sort-free
+    # SHJ with the distinct-h-cardinality freq side as build.
     freq = w.groupBy("h").agg(
         F.count("*").alias("tot"),
         F.min(F.struct(F.col("id").alias("cid"),
                        F.col("pos").alias("cpos"),
                        F.col("n_toks").alias("cnt"))).alias("canon"),
-    )
-    if onepass:
-        # both join children already carry the w exchange's
-        # hashpartitioning(h); the hint picks the sort-free SHJ with the
-        # distinct-h-cardinality freq side as build
-        freq = freq.hint("shuffle_hash")
-    elif freq_broadcast:
-        freq = F.broadcast(freq)
+    ).hint("shuffle_hash")
     removed = (
         w.join(freq, "h")
         .filter(
@@ -1160,17 +1142,16 @@ def drop_duplicate_spans(
         .groupBy("id")
         .agg(F.collect_set("rp").alias("removed"))
     )
-    if onepass:
-        # Generate barrier over the doc-cardinality removal sets: the
-        # rebuild LeftOuter join infers isnotnull(id) on its build side,
-        # and without the barrier that filter pushes all the way into the
-        # PROBE copy of w's scan (and only that copy — freq's columns
-        # don't derive id), de-identifying the two w subtrees and
-        # defeating ReuseExchange exactly like the n_toks pruning did.
-        # Behind the explode it stays a post-agg filter on ≤|docs| rows.
-        removed = removed.select(
-            F.explode(F.array(F.struct("id", "removed"))).alias("_r")
-        ).select("_r.id", "_r.removed")
+    # Generate barrier over the doc-cardinality removal sets: the
+    # rebuild LeftOuter join infers isnotnull(id) on its build side,
+    # and without the barrier that filter pushes all the way into the
+    # PROBE copy of w's scan (and only that copy — freq's columns
+    # don't derive id), de-identifying the two w subtrees and
+    # defeating ReuseExchange exactly like the n_toks pruning did.
+    # Behind the explode it stays a post-agg filter on ≤|docs| rows.
+    removed = removed.select(
+        F.explode(F.array(F.struct("id", "removed"))).alias("_r")
+    ).select("_r.id", "_r.removed")
     empty = F.array().cast("array<int>")
     keep = F.filter(
         "toks",

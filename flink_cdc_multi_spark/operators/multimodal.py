@@ -2432,10 +2432,10 @@ def synthesize_avi_corpus(docs: DataFrame) -> DataFrame:
     non-negative), each frame a DC-only baseline JPEG whose every pixel
     decodes to exactly dc+128 with dc = (doc_id·7 + frame·19 + block·13)
     % 201 − 100. The ONE generator shared by the gated query
-    (plans.extensions.ext_multimodal_video), its DuckDB oracle's
-    closed-form (which replays these residues — sign-normalized there),
-    and the sf10 perf harness (tools/perf_r15_sf10.py) — r15 VERDICT
-    flagged the perf tool's hand-copy as drift risk."""
+    (plans.extensions.ext_multimodal_video) and its DuckDB oracle's
+    closed-form (which replays these residues — sign-normalized there);
+    r15 VERDICT flagged a perf harness's hand-copy as drift risk
+    (PERF.md "r15 sf10 scale rows")."""
     import pandas as pd
 
     def gen(it):

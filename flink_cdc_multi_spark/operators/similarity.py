@@ -561,8 +561,8 @@ def ivf_topk_fixed(
     total order. vs the unfused plan this deletes one ArrowEvalPython hop
     on the query side, the corpus-side DOUBLE cell_of evaluation (the
     optimizer pushes the join's isnotnull(cell) below the UDF and then
-    re-evaluates it — guide §4.4's duplication trap, visible in
-    plans/r17/ext_ann_ivf_before.txt nodes (3)/(7)), the BroadcastHashJoin,
+    re-evaluates it — guide §4.4's duplication trap, PERF.md "r17
+    OPTIMIZATION phase" wave 5), the BroadcastHashJoin,
     and — the scale item — the per-candidate-pair INTERPRETED zip_with/
     aggregate cosine fold, replaced by vectorized numpy with bit-identical
     left-to-right fold order (each step one IEEE multiply+add in the same

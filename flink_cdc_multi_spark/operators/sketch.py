@@ -13,13 +13,12 @@ streaming sketch over the same values are BIT-IDENTICAL (pinned in
 tests/test_streaming_hll.py and the ext_sketch_hll_merge oracle).
 
 Hash contract (see ext_sketch_hll's docstring for the full rationale):
-``use_xxhash=True`` is the production fast path (one JVM xxhash64 call —
-3.0 → 1.7 s over 500k sf10 docs, PERF.md r16) and, since r17, ALSO the
-oracle-gated form: DuckDB replays the exact xxhash64 bits through the
-generated XXH64 chain in functions/xxh64_sql. ``use_xxhash=False`` keeps
-the original md5-hash60 portable contract. rho is computed by a 6-step integer binary search (no float
-log2 whose libm rounding could diverge engines, no per-token string
-alloc). The estimator's one floating op — floor(C / harmonic) — is IEEE
+one JVM xxhash64 call per value (3.0 → 1.7 s over 500k sf10 docs against
+the md5-hash60 form it replaced, PERF.md r16), oracle-gated: DuckDB
+replays the exact xxhash64 bits through the generated XXH64 chain in
+functions/xxh64_sql. rho is computed by a 6-step integer binary search
+(no float log2 whose libm rounding could diverge engines, no per-token
+string alloc). The estimator's one floating op — floor(C / harmonic) — is IEEE
 division of a shared decimal constant, identical cross-engine; the
 small-range linear-counting correction uses 63 PRE-COMPUTED integers
 (``HLL_LC``) because ln() is libm- not IEEE-specified and must never
@@ -48,21 +47,15 @@ HLL_LC = tuple(
 )
 
 
-def hll_j_rho(value_col: Column, use_xxhash: bool = False) -> tuple[Column, Column]:
-    """(register index, rho) columns for one hashed value.
-
-    md5 path: 60-bit portable hash — top 6 bits → register, rho = leading
-    -zero rank of the remaining 54. xxhash path: full 64-bit JVM hash —
-    top 6 → register, 58 rho bits. rho is capped at 55 on BOTH paths so
-    the fixed-point harmonic scale stays 2^55 (at a 2^59 scale,
-    empties·2^59 overflows int64 for ≥16 empty registers and ANSI mode
-    kills the job — the r16 review finding)."""
-    if use_xxhash:
-        h = F.xxhash64(value_col)
-        rem_bits = 58
-    else:
-        h = F.conv(F.substring(F.md5(value_col), 1, 15), 16, 10).cast("long")
-        rem_bits = 54
+def hll_j_rho(value_col: Column) -> tuple[Column, Column]:
+    """(register index, rho) columns for one hashed value: full 64-bit
+    xxhash64 — top 6 bits → register, rho = leading-zero rank of the
+    remaining 58. rho is capped at 55 so the fixed-point harmonic scale
+    stays 2^55 (at a 2^59 scale, empties·2^59 overflows int64 for ≥16
+    empty registers and ANSI mode kills the job — the r16 review
+    finding)."""
+    h = F.xxhash64(value_col)
+    rem_bits = 58
     j = F.shiftrightunsigned(h, rem_bits)
     rem = h.bitwiseAND(F.lit((1 << rem_bits) - 1))
     # bit_length(rem) by 6-step integer binary search — value-identical
@@ -146,31 +139,23 @@ def hll_estimate_py(regs: list[int]) -> tuple[int, int, int]:
 # ---------------------------------------------------------------------------
 # Count-min kernel (shared by plans/extensions.ext_sketch_cms and the
 # streaming heavy-hitter estimator streaming/stateful.cms_freq_stream).
-# Kirsch–Mitzenmacher double hashing off ONE md5-hash60: col_r =
+# Kirsch–Mitzenmacher double hashing off ONE xxhash64: col_r =
 # (h1 + r·h2) mod CMS_W with h2 forced odd — one hash per occurrence,
 # replayed as identical integer arithmetic by the DuckDB oracle.
 CMS_D, CMS_W = 4, 256
 
 
-def cms_h1_h2(value_col: Column, use_xxhash: bool = False) -> tuple[Column, Column]:
+def cms_h1_h2(value_col: Column) -> tuple[Column, Column]:
     """(h1, h2) columns for the Kirsch–Mitzenmacher row-column derivation,
-    split exactly as ext_sketch_cms's oracle replays it.
-
-    ``use_xxhash=True`` (the r17 gate default — one JVM xxhash64 call,
-    replayed in DuckDB by the generated XXH64 chain in
-    functions/xxh64_sql) takes h1/h2 from the unsigned 64-bit pattern:
+    split exactly as ext_sketch_cms's oracle replays it: one JVM xxhash64
+    call (replayed in DuckDB by the generated XXH64 chain in
+    functions/xxh64_sql), h1/h2 taken from the unsigned 64-bit pattern —
     low 20 bits and bits 30.. via shiftrightUNSIGNED (the hash is signed
     on the Spark side, so arithmetic %/>> would diverge from the
-    oracle's unsigned ``%``/``//``; the bit ops are sign-free on both).
-    ``use_xxhash=False`` keeps the original md5-hash60 contract."""
-    if use_xxhash:
-        h = F.xxhash64(value_col)
-        h1 = h.bitwiseAND(F.lit(CMS_W * 4096 - 1))
-        h2 = F.shiftrightunsigned(h, 30).bitwiseOR(F.lit(1))
-    else:
-        h = F.conv(F.substring(F.md5(value_col), 1, 15), 16, 10).cast("long")
-        h1 = h % F.lit(CMS_W * 4096)
-        h2 = F.shiftright(h, 30).bitwiseOR(F.lit(1))
+    oracle's unsigned ``%``/``//``; the bit ops are sign-free on both)."""
+    h = F.xxhash64(value_col)
+    h1 = h.bitwiseAND(F.lit(CMS_W * 4096 - 1))
+    h2 = F.shiftrightunsigned(h, 30).bitwiseOR(F.lit(1))
     return h1, h2
 
 

@@ -105,10 +105,10 @@ def bpe_normalize(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), "[^a-z]+", " "))
 
 
-# Measured r13 (tools/probe_bpe_merges.py, sf0.1): the chained-replace
-# encoder stays whole-stage-codegen'd and scales LINEARLY in |merges|
-# through 256 (0.59 s @16 → 4.39 s @256 per wave — each merge is one
-# full-string scan, no codegen knee), but 384+ nested replace() nodes
+# Measured r13 (PERF.md "r13: BPE merge-table scale probe", sf0.1): the
+# chained-replace encoder stays whole-stage-codegen'd and scales LINEARLY
+# in |merges| through 256 (0.59 s @16 → 4.39 s @256 per wave — each
+# merge is one full-string scan, no codegen knee), but 384+ nested replace() nodes
 # overflow the DRIVER's JVM stack at plan construction
 # (ColumnNode→Expression conversion is recursive). Above this bound
 # bpe_encode_table switches to the Arrow pandas_udf fallback — the same
@@ -129,7 +129,7 @@ def bpe_encode_table(text: Column, merges, kernel: bool | None = None) -> Column
     full-string scan+allocation passes per document, while the kernel
     pays one boundary crossing and a per-word encode amortized by the
     word cache — ABAB both orders: 1.9× sf0.1, 5.0× sf1, 4.2-4.5× sf10,
-    bit-identical outputs, tools/opt_r18_abab_bpe.py). Both paths share
+    bit-identical outputs, PERF.md "r18"). Both paths share
     bpe_normalize (the Column form) so normalization can never diverge,
     and the kernel is pinned bit-identical to the chain for arbitrary
     tables in test_bpe_encode_table_fallback_matches_chain."""
@@ -403,14 +403,12 @@ QUALITY_WEIGHTS: list[int] = _quality_weights()
 
 def quality_score(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    bucket_of=None,
 ) -> DataFrame:
     """Linear n-gram-hash quality scorer: per document, the exact-integer
     dot product of its hashed token counts with the fixed QUALITY_WEIGHTS
     table — sum over token OCCURRENCES of w[bucket(token)] (bucket =
-    low 6 bits of xxhash64 since r17, replaying DuckDB's unsigned
-    ``h % 64``; was md5-hash60 % B — override via ``bucket_of``) — plus
-    the token count, so a caller thresholds on score or on the
+    low 6 bits of xxhash64, replaying DuckDB's unsigned ``h % 64``) —
+    plus the token count, so a caller thresholds on score or on the
     length-normalized score/n_tokens without any float in the contract.
     Docs with no tokens have no row (the commonness contract).
 
@@ -418,8 +416,6 @@ def quality_score(
     ONE partially-aggregated groupBy exchange carrying (doc_id, int) —
     no weight-table join (B=64 weights live in the expression), no
     Python. The fasttext inference shape, minus the learned weights."""
-    from flink_cdc_multi_spark.operators.dedup import _md5_hash60
-
     w = F.array(*[F.lit(x) for x in QUALITY_WEIGHTS])
     tok = widen_narrow_scan(
         df.filter(F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != ""))
@@ -427,13 +423,9 @@ def quality_score(
         F.col(id_col),
         F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
     )
-    b = (
-        bucket_of(F.col("token"))
-        if bucket_of is not None
-        # unsigned % 64 == low 6 bits (QUALITY_BUCKETS is a power of 2);
-        # arithmetic % on the SIGNED hash would diverge from DuckDB
-        else F.xxhash64(F.col("token")).bitwiseAND(F.lit(QUALITY_BUCKETS - 1))
-    ).cast("int")
+    # unsigned % 64 == low 6 bits (QUALITY_BUCKETS is a power of 2);
+    # arithmetic % on the SIGNED hash would diverge from DuckDB
+    b = F.xxhash64(F.col("token")).bitwiseAND(F.lit(QUALITY_BUCKETS - 1)).cast("int")
     return (
         tok.select(F.col(id_col), F.element_at(w, b + 1).alias("wt"))
         .groupBy(id_col)
@@ -536,7 +528,6 @@ def redact(text: Column, patterns=None) -> tuple[Column, Column]:
 
 def line_dedup(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    line_key=None, onepass: bool = True,
 ) -> DataFrame:
     """Corpus-wide exact LINE dedup (the C4/RefinedWeb/Dolma pass: a line
     appearing in multiple documents survives only at its FIRST occurrence
@@ -549,103 +540,75 @@ def line_dedup(
     adversarial fixture's duplicate-line rows.
 
     Contracts: line identity is hash-keyed (both engines group/join on
-    xxhash64(line) since r17 — was md5(line); the contamination
-    hash-contract pattern, collisions move both sides together;
-    ``line_key`` overrides the lane); whitespace-only lines NEVER dedup
+    xxhash64(line); the contamination hash-contract pattern, collisions
+    move both sides together); whitespace-only lines NEVER dedup
     (removing every blank separator but one would mangle formatting
-    corpus-wide). r18: whitespace-only lines are also kept OUT of the
-    content hash space (ADVICE r17: the DuckDB oracle's lmap holds
-    content lines only, so a 64-bit whitespace↔content collision used
-    to be the one spot where 'collisions move both sides together'
-    failed) — the onepass lane joins on (is_ws, h) so the key spaces
-    are disjoint by construction; the broadcast lane NULLs the probe
-    key on whitespace rows.
+    corpus-wide). Whitespace-only lines are also kept OUT of the
+    content hash space (the DuckDB oracle's lmap holds content lines
+    only, so a 64-bit whitespace↔content collision would be the one
+    spot where 'collisions move both sides together' fails) — the join
+    is on (is_ws, h) so the key spaces are disjoint by construction.
 
-    Scale shape (``onepass=True``, r18 wave 2 — the spans_drop wave-8
-    topology; VERDICT r17 item 2): the line stream is derived ONCE and
-    repartitioned on the 8-byte hash — the winner aggregate rides that
-    exchange's partitioning (complete mode, no second line exchange)
-    and the probe is an exchange-free in-partition shuffled-hash join
-    against it, so the corpus text shuffles exactly once before the
-    doc-keyed reassembly (the old shape re-ran the full scan+split
-    Generate pass per consumer and sort-merge-joined the streams — two
-    corpus passes + two sorts at 100 TB where the winners side outgrows
-    the broadcast threshold). Subtree-identity discipline (the r17
-    wave-8/9 traps, pinned by executed-plan test): the winner struct
-    carries ``line`` as a tie-dead third field so the freq branch reads
-    every exchanged column (pruning would de-identify), the winner agg
-    takes the NULL-free (is_ws, h) groups WITHOUT a pre-filter (a
-    content filter would push below the shared exchange), and every
-    join key is non-nullable so no one-sided isnotnull inference can
-    fire. ``onepass=False`` keeps the r12 commonness topology (winner
-    min-reduction broadcast-when-small, probe re-derived) — the
-    broadcast-regime lane. Both lanes: reassembly is one partial-agg
+    Scale shape (the spans_drop topology): the line stream is derived
+    ONCE and repartitioned on the 8-byte hash — the winner aggregate
+    rides that exchange's partitioning (complete mode, no second line
+    exchange) and the probe is an exchange-free in-partition
+    shuffled-hash join against it, so the corpus text shuffles exactly
+    once before the doc-keyed reassembly (a winner-broadcast shape
+    re-runs the full scan+split Generate pass per consumer and
+    sort-merge-joins the streams — two corpus passes + two sorts at
+    100 TB where the winners side outgrows the broadcast threshold).
+    Subtree-identity discipline (pinned by executed-plan test): the
+    winner struct carries ``line`` as a tie-dead third field so the
+    freq branch reads every exchanged column (pruning would
+    de-identify), the winner agg takes the NULL-free (is_ws, h) groups
+    WITHOUT a pre-filter (a content filter would push below the shared
+    exchange), and every join key is non-nullable so no one-sided
+    isnotnull inference can fire. Reassembly is one partial-agg
     groupBy per doc; the in-doc sort is array_sort over that doc's
     lines only, never a global sort."""
-    key = line_key if line_key is not None else (lambda c: F.xxhash64(c))
     lines = widen_narrow_scan(df.filter(F.col(text_col).isNotNull())).select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     )
-    if onepass:
-        # repartition on BOTH join keys: requireAllClusterKeysForCoPartition
-        # (default true) demands all-key partitioning on both join sides —
-        # a bare repartition(h) gets rewritten to (is_ws, h) on the probe
-        # side only, de-identifying the subtrees AND stacking an
-        # ENSURE_REQUIREMENTS exchange on the winners side (measured: 2
-        # Generate passes + 3 exchanges). is_ws is a function of line, so
-        # the row distribution is identical to hash(h).
-        lines = lines.select(
-            "doc_id", "pos", "line",
-            (F.trim(F.col("line")) == "").alias("is_ws"),
-            key(F.col("line")).alias("h"),
-        ).repartition(F.col("is_ws"), F.col("h"))
-        # the third struct field exists ONLY so this branch reads the
-        # exchanged `line` column (pruning identity — see docstring);
-        # length(line) reads it while buffering an INT, so the SHJ build
-        # side never holds distinct-line TEXT (at 100 TB the build table
-        # is (bool, int64, {int64,int,int}) per distinct line, not the
-        # corpus text). (doc_id, pos) is unique per row, so the extra
-        # field can never change the min.
-        winners = (
-            lines.groupBy("is_ws", "h")
-            .agg(F.min(F.struct("doc_id", "pos",
-                                F.length("line").alias("ln"))).alias("w"))
-            .select(F.col("is_ws").alias("w_ws"), F.col("h").alias("wh"),
-                    "w")
-        )
-        tagged = lines.join(
-            winners.hint("shuffle_hash"),
-            (lines["is_ws"] == F.col("w_ws")) & (lines["h"] == F.col("wh")),
-            "left",
-        ).withColumn(
-            "kept",
-            # is_ws first: a whitespace line always matches its own
-            # (is_ws=true, h) group's winner but is kept unconditionally
-            F.col("is_ws")
-            | F.col("w").isNull()
-            | ((F.col("doc_id") == F.col("w.doc_id"))
-               & (F.col("pos") == F.col("w.pos"))),
-        )
-    else:
-        content = lines.filter(F.trim(F.col("line")) != "")
-        winners = (
-            content.select(key(F.col("line")).alias("h"),
-                           F.struct("doc_id", "pos").alias("w"))
-            .groupBy("h")
-            .agg(F.min("w").alias("w"))
-        )
-        # probe key NULL on whitespace rows (ADVICE r17): they must
-        # never join a content winner, not even on a 64-bit collision
-        probe_key = F.when(F.trim(lines["line"]) != "", key(lines["line"]))
-        tagged = lines.join(
-            winners, probe_key == winners["h"], "left"
-        ).withColumn(
-            "kept",
-            F.col("w").isNull()
-            | ((F.col("doc_id") == F.col("w.doc_id"))
-               & (F.col("pos") == F.col("w.pos"))),
-        )
+    # repartition on BOTH join keys: requireAllClusterKeysForCoPartition
+    # (default true) demands all-key partitioning on both join sides —
+    # a bare repartition(h) gets rewritten to (is_ws, h) on the probe
+    # side only, de-identifying the subtrees AND stacking an
+    # ENSURE_REQUIREMENTS exchange on the winners side (measured: 2
+    # Generate passes + 3 exchanges). is_ws is a function of line, so
+    # the row distribution is identical to hash(h).
+    lines = lines.select(
+        "doc_id", "pos", "line",
+        (F.trim(F.col("line")) == "").alias("is_ws"),
+        F.xxhash64(F.col("line")).alias("h"),
+    ).repartition(F.col("is_ws"), F.col("h"))
+    # the third struct field exists ONLY so this branch reads the
+    # exchanged `line` column (pruning identity — see docstring);
+    # length(line) reads it while buffering an INT, so the SHJ build
+    # side never holds distinct-line TEXT (at 100 TB the build table
+    # is (bool, int64, {int64,int,int}) per distinct line, not the
+    # corpus text). (doc_id, pos) is unique per row, so the extra
+    # field can never change the min.
+    winners = (
+        lines.groupBy("is_ws", "h")
+        .agg(F.min(F.struct("doc_id", "pos",
+                            F.length("line").alias("ln"))).alias("w"))
+        .select(F.col("is_ws").alias("w_ws"), F.col("h").alias("wh"), "w")
+    )
+    tagged = lines.join(
+        winners.hint("shuffle_hash"),
+        (lines["is_ws"] == F.col("w_ws")) & (lines["h"] == F.col("wh")),
+        "left",
+    ).withColumn(
+        "kept",
+        # is_ws first: a whitespace line always matches its own
+        # (is_ws=true, h) group's winner but is kept unconditionally
+        F.col("is_ws")
+        | F.col("w").isNull()
+        | ((F.col("doc_id") == F.col("w.doc_id"))
+           & (F.col("pos") == F.col("w.pos"))),
+    )
     return tagged.groupBy("doc_id").agg(
         F.sum(F.when(F.col("kept"), 1).otherwise(0)).cast("bigint").alias("n_kept"),
         F.sum(F.when(F.col("kept"), 0).otherwise(1)).cast("bigint").alias("n_dropped"),

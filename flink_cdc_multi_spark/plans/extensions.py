@@ -326,7 +326,7 @@ def ext_dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from train_ivf_centroids (seeded kmeans++/Lloyd on the int64
     LSH_QUANT grid) instead of 16 fixed data vectors — the same upgrade
     that bought the ANN path +78% recall@3 (PERF.md r13). Measured
-    (tools/measure_semdedup_trained.py, PERF.md r15): dup recall vs the
+    (PERF.md "r15 trained coarse quantizer in SemDeDup"): dup recall vs the
     quantization-free truth rises 0.417→0.486 (2k vectors) / 0.805→0.827
     (5k), zero false drops either way, and max/mean cell balance tightens
     1.31→1.10 — at 100 TB the balance bound is what caps the slowest
@@ -486,9 +486,7 @@ def ext_dedup_spans_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, n_tokens, n_removed, cleaned) — exact integers plus the
     cleaned text, so the value hash pins the canonical-selection
     tie-break, the overlapping-span position union, AND the rebuilt
-    string. Topology (onepass default since r17 wave 8 — ADVICE r18
-    hygiene: the retired broadcast guard's freq_broadcast computation is
-    gone from this call site): one window stream repartitioned on h,
+    string. Topology: one window stream repartitioned on h,
     freq aggregate riding that exchange, sort-free in-partition SHJ
     probe + doc-keyed SHJ rebuild; the freq side never broadcasts."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
@@ -1224,8 +1222,9 @@ def ext_text_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is (doc_id, h) = 16 bytes/row, the frequency build's shuffle
     is (h, cnt). Since r17 the hash rides the xxhash64 fast lane (ONE
     codegen JVM call; the md5-hash60 form paid md5 + base-16 conv per
-    occurrence — ABAB 1.44x at sf1, tools/opt_r17_abab_xxh.py), replayed
-    bit-exact by the generated DuckDB XXH64 chain per DISTINCT token.
+    occurrence — ABAB 1.44x at sf1, PERF.md "r17 OPTIMIZATION wave
+    7"), replayed bit-exact by the generated DuckDB XXH64 chain per
+    DISTINCT token.
     Term frequencies are hash-grouped counts BY CONTRACT, mirrored in
     the DuckDB oracle, so a 64-bit collision cannot diverge the engines
     (the shingle-distinct contract pattern). The exploded token stream
@@ -1266,9 +1265,9 @@ def ext_text_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_id, h) -> c pre-aggregate whose exchange both branches share
     # (the tfidf wave-9 shape; Σ_occ tf ≡ Σ_h c·tf keeps every integer)
     # deletes the second tokenize pass — but LOSES 0.71x at sf10 (ABAB,
-    # tools/opt_r17_abab_tfidf.py TFIDF_ONLY=commonness; 0.88-1.03x at
-    # smaller SFs): unlike tfidf, no (doc, token) exchange exists here
-    # to reuse — the candidate ADDS one, and post-wave-7 the duplicated
+    # PERF.md "r17 OPTIMIZATION wave 9"; 0.88-1.03x at smaller SFs):
+    # unlike tfidf, no (doc, token) exchange exists here to reuse — the
+    # candidate ADDS one, and post-wave-7 the duplicated
     # per-occurrence work is a single codegen xxhash64, cheaper than
     # shuffling |distinct (doc, h)| rows. The two-pass broadcast form
     # below stays the winner (the docstring's not-cached trade, now
@@ -2309,10 +2308,10 @@ def ext_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern). See operators/text.line_dedup for contracts (xxhash64-keyed
     line identity since r17 — was md5; whitespace-only lines never dedup,
     and since r18 never share the content key space) and the 100 TB
-    shape (r18 wave 2 onepass: one scan+split pass repartitioned on
-    (is_ws, h), winner reduction riding that exchange, in-partition SHJ
-    probe — ABAB 1.45x sf0.1, 1.15-1.22x sf10 incl. the forced
-    non-broadcast regime, tools/opt_r18_abab_lines.py)."""
+    shape (r18 wave 2: one scan+split pass repartitioned on (is_ws, h),
+    winner reduction riding that exchange, in-partition SHJ probe —
+    ABAB 1.45x sf0.1, 1.15-1.22x sf10 incl. the forced non-broadcast
+    regime, PERF.md "r18")."""
     docs = load_table(spark, sf_dir, "documents")
     return X.line_dedup(docs)
 
@@ -2645,11 +2644,10 @@ def ext_sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Count-min sketch geometry (ext_sketch_cms): d hash rows × w columns.
 # Kirsch–Mitzenmacher double hashing derives the d row-columns from ONE
 # base hash — col_r = (h1 + r·h2) mod w with h2 forced odd — so the
-# scan pays a single hash per occurrence (xxhash64 since r17; md5-hash60
-# available via use_xxhash=False) and both engines replay the identical
-# integer arithmetic. r16: the kernel lives in operators/sketch.py
-# (shared with the streaming heavy-hitter estimator); these aliases keep
-# the oracle-side names.
+# scan pays a single hash per occurrence (xxhash64 since r17) and both
+# engines replay the identical integer arithmetic. r16: the kernel lives
+# in operators/sketch.py (shared with the streaming heavy-hitter
+# estimator); these aliases keep the oracle-side names.
 from flink_cdc_multi_spark.operators.sketch import (  # noqa: E402
     CMS_D as _CMS_D,
 )
@@ -2686,7 +2684,7 @@ def ext_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = base.select(
         F.explode(X.tokens(F.col("text"))).alias("token")
     )
-    h1, h2 = cms_h1_h2(F.col("token"), use_xxhash=True)  # r17 fast lane
+    h1, h2 = cms_h1_h2(F.col("token"))
     cells = F.array(*[
         F.struct(
             F.lit(r).alias("r"),
@@ -3298,56 +3296,44 @@ def ext_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     m·ln(m/V_empty)) is applied through the _HLL_LC table of 63
     PRE-COMPUTED integers shared verbatim by both engines — ln() is
     libm- not IEEE-specified and must never execute inside either
-    engine.
-
-    hll_sketch_over(use_xxhash=False) keeps the md5-hash60 portable
-    contract available (the original r16 gated form)."""
+    engine."""
     docs = load_table(spark, sf_dir, "documents")
     # r17: the gated form IS the production fast path now — the oracle
     # replays xxhash64 exactly via the generated XXH64 chain
     # (functions/xxh64_sql), so the md5+conv tax is no longer the price
-    # of replayability; use_xxhash=False keeps the md5 contract available.
-    # The r16 per-doc array_distinct pre-pass is GONE with it: it paid
-    # for itself only while the hash was expensive (md5+conv per
-    # occurrence); with one cheap JVM hash per occurrence the register
-    # MAX absorbs duplicates for free and the array build/dedup is pure
-    # overhead (same-session ABAB at sf10: 1.68 → 1.50 s, bit-equal
-    # results). The oracle dedups (lang, token) globally instead —
+    # of replayability. The r16 per-doc array_distinct pre-pass is GONE
+    # with it: it paid for itself only while the hash was expensive
+    # (md5+conv per occurrence); with one cheap JVM hash per occurrence
+    # the register MAX absorbs duplicates for free and the array
+    # build/dedup is pure overhead (same-session ABAB at sf10: 1.68 →
+    # 1.50 s, bit-equal results). The oracle dedups (lang, token) globally instead —
     # value-identical, each engine dedups where it is cheapest.
     toks = docs.filter(F.trim("text") != "").select(
         "lang", F.explode(X.tokens(F.col("text"))).alias("token")
     )
-    return hll_sketch_over(toks, ["lang"], "token", use_xxhash=True)
+    return hll_sketch_over(toks, ["lang"], "token")
 
 
 def hll_sketch_over(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    use_xxhash: bool = False,
 ) -> DataFrame:
     """HLL distinct sketch of ``value_col`` per ``group_cols`` — the
     value-parameterized core of ext_sketch_hll (the graph_pagerank_over
-    factoring). ``use_xxhash=True`` (the r17 gated form) is one JVM
-    xxhash64 call, replayed bit-exact by the oracle's generated DuckDB
-    XXH64 chain (functions/xxh64_sql); ``use_xxhash=False`` keeps the
-    original md5-hash60 portable contract (md5 + base-16 conv — the two
-    measured scan walls at sf10: 3.0 vs 1.7 s over 500k docs, PERF.md
-    r16). Both paths share the 64 registers / rho / fixed-point
-    harmonic sum / shared-table linear counting; estimates are
-    statistically identical (different hash ⇒ different register
-    values).
+    factoring): one JVM xxhash64 call per value, replayed bit-exact by
+    the oracle's generated DuckDB XXH64 chain (functions/xxh64_sql),
+    then the 64 registers / rho / fixed-point harmonic sum /
+    shared-table linear counting of operators/sketch.
 
-    NULL values are dropped (r16 review): md5(NULL) is NULL, and a NULL
-    register index would land a phantom 65th register in the group
-    (F.least turns its NULL rho into 55), driving v_filled past 64 and
-    the harmonic sum negative; xxhash64(NULL) would instead silently
-    count NULL as one distinct value. NULL is not a value — the
-    count-distinct convention both engines share."""
+    NULL values are dropped (r16 review): xxhash64(NULL) would silently
+    count NULL as one distinct value (and a NULL-valued hash would land
+    a phantom 65th register, driving v_filled past 64). NULL is not a
+    value — the count-distinct convention both engines share."""
     df = df.filter(F.col(value_col).isNotNull())
     # j/rho + register-cap rationale live in operators/sketch.hll_j_rho
     # (r16 extraction — the streaming counter shares them verbatim)
-    j, rho = hll_j_rho(F.col(value_col), use_xxhash=use_xxhash)
+    j, rho = hll_j_rho(F.col(value_col))
     regs = (
         df.select(*group_cols, j.alias("j"), rho.alias("rho"))
         .groupBy(*group_cols, "j")
@@ -3385,7 +3371,7 @@ def ext_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.explode(X.tokens(F.col("text"))).alias("token"),
     )
-    j, rho = hll_j_rho(F.col("token"), use_xxhash=True)  # r17 fast lane
+    j, rho = hll_j_rho(F.col("token"))
     shard_regs = (
         toks.select("lang", "source", j.alias("j"), rho.alias("rho"))
         .groupBy("lang", "source", "j")
@@ -3787,8 +3773,8 @@ def graph_labelprop_over(pairs: DataFrame, iters: int = 3,
     groupBy(v).agg(mode(lbl, deterministic=true)) — Spark 4's
     deterministic mode IS this operator's tie contract (most frequent
     value, ties broken by MIN; pinned against the two-agg reduction on
-    a tie-hostile fixture across partial-merge boundaries in
-    tools/opt_r18_abab_labelprop.py) — deleting the per-round
+    a tie-hostile fixture across partial-merge boundaries, PERF.md
+    "r18") — deleting the per-round
     (v, nl)-count groupBy and its exchange (2 exchanges/round → 1).
     ABAB both orders: sf0.1 1.21×/1.20×, sf10-e100 1.73×/1.08×,
     bit-identical labels + checksum. The SHUFFLE lane keeps the

@@ -17,7 +17,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 RUNNING_STATUS_SCHEMA = T.StructType(
     [
@@ -111,19 +110,20 @@ _DELTA_STATE_SCHEMA = T.StructType(
 _NEG_INF_POS = -(1 << 62)
 
 
-def _delta_core(prev: tuple, pdfs: Iterator[pd.DataFrame]):
-    """Shared per-key delta reduction for BOTH state APIs
-    (applyInPandasWithState and transformWithStateInPandas): reduce the
-    batch to the key's final image (max pos), retract/add against the
-    previous state, and return (output column lists, new state tuple or
-    None when nothing was applied). One body → the two implementations
-    cannot drift semantically.
+def _delta_update(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Per-key delta reduction: reduce the batch to the key's final image
+    (max pos), retract/add against the previous state, and advance the
+    state when anything was applied.
 
     Replay protection: a batch whose newest change for this key is at or
     below the applied offset is a duplicate delivery — emitting its
     deltas again would double-count, so it is dropped entirely (the
     at-least-once analogue of sources.offsets.offset_greater)."""
-    g_old, v_old, has, last_pos = prev
+    g_old, v_old, has, last_pos = (
+        state.get if state.exists else (None, 0, 0, _NEG_INF_POS)
+    )
     best = None
     for pdf in pdfs:
         if not len(pdf):
@@ -132,7 +132,6 @@ def _delta_core(prev: tuple, pdfs: Iterator[pd.DataFrame]):
         if best is None or int(row["pos"]) > int(best["pos"]):
             best = row
     out_g, out_c, out_t = [], [], []
-    new_state = None
     if best is not None and int(best["pos"]) > int(last_pos):
         if has:
             out_g.append(g_old)
@@ -144,50 +143,10 @@ def _delta_core(prev: tuple, pdfs: Iterator[pd.DataFrame]):
             out_g.append(g_new)
             out_c.append(1)
             out_t.append(v_new)
-            new_state = (g_new, v_new, 1, int(best["pos"]))
+            state.update((g_new, v_new, 1, int(best["pos"])))
         else:
-            new_state = (None, 0, 0, int(best["pos"]))
-    return (out_g, out_c, out_t), new_state
-
-
-def _delta_update(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    prev = state.get if state.exists else (None, 0, 0, _NEG_INF_POS)
-    (out_g, out_c, out_t), new_state = _delta_core(prev, pdfs)
-    if new_state is not None:
-        state.update(new_state)
+            state.update((None, 0, 0, int(best["pos"])))
     yield pd.DataFrame({"g": out_g, "d_cnt": out_c, "d_total": out_t})
-
-
-class _DeltaProcessor(StatefulProcessor):
-    """transformWithStateInPandas twin of ``_delta_update`` (Spark 4's
-    successor API to applyInPandasWithState — VERDICT r10 item 7). Same
-    per-key tuple in a named ValueState, same ``_delta_core`` reduction,
-    so the two paths are semantically one implementation. Requires the
-    RocksDB state-store provider (engine restriction for the
-    transformWithState operator family)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("delta", _DELTA_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self._state.get() if self._state.exists() else None
-        if prev is None:
-            prev = (None, 0, 0, _NEG_INF_POS)
-        (out_g, out_c, out_t), new_state = _delta_core(prev, rows)
-        if new_state is not None:
-            self._state.update(new_state)
-        yield pd.DataFrame({"g": out_g, "d_cnt": out_c, "d_total": out_t})
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
 
 
 def cdc_delta_stream(
@@ -197,7 +156,6 @@ def cdc_delta_stream(
     value_col: str,
     order_col: str,
     op_col: str = "_op",
-    impl: str = "apply",
 ) -> DataFrame:
     """Streaming IVM delta emission: per-pk state holds the current
     (group, value, applied offset); each micro-batch reduces its changes
@@ -221,17 +179,12 @@ def cdc_delta_stream(
     is O(batch), per-key state O(1) — the streaming-native shape of the
     batch operator, with no materialized-state probe join at all.
 
-    ``impl`` selects the state API: ``"apply"`` (default) =
-    applyInPandasWithState, ``"tws"`` = transformWithStateInPandas
-    (Spark 4's successor; REQUIRES the RocksDB state-store provider AND
-    the protobuf runtime — its Python state protocol is
-    protobuf-serialized — and its richer surface: timers, initial state,
-    state TTL, multiple state variables). Both run the same
-    ``_delta_core`` reduction; ``test_delta_stream_tws_matches_apply``
-    pins row-level equivalence where protobuf is available. ``"apply"``
-    stays the default until the 1M-key state A/B
-    (tools/bench_state_scale.py ... tws) can run — blocked in this
-    build environment by the missing protobuf dependency."""
+    State API: applyInPandasWithState. Its successor,
+    transformWithStateInPandas, needs the RocksDB state-store provider
+    and the protobuf runtime (its Python state protocol is
+    protobuf-serialized); a twin on it was retired without ever being
+    measured, since no test environment had protobuf (PERF.md "Retired
+    lanes")."""
     from pyspark.sql import functions as F
 
     keyed = changes.select(
@@ -241,25 +194,6 @@ def cdc_delta_stream(
         F.col(op_col).cast("string").alias("op"),
         F.col(order_col).cast("long").alias("pos"),
     )
-    if impl == "tws":
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-        except ImportError as e:
-            raise ImportError(
-                "cdc_delta_stream(impl='tws') needs the protobuf runtime: "
-                "transformWithState's Python state-server protocol is "
-                "protobuf-serialized (pyspark.sql.streaming.proto). "
-                "Install 'protobuf' on driver and executors, or use "
-                "impl='apply'."
-            ) from e
-        return keyed.groupBy("pk").transformWithStateInPandas(
-            statefulProcessor=_DeltaProcessor(),
-            outputStructType=DELTA_SCHEMA,
-            outputMode="update",
-            timeMode="none",
-        )
-    if impl != "apply":
-        raise ValueError(f"unknown cdc_delta_stream impl: {impl!r}")
     return keyed.groupBy("pk").applyInPandasWithState(
         _delta_update,
         outputStructType=DELTA_SCHEMA,
@@ -286,8 +220,8 @@ def cdc_delta_stream(
 # STORED in the state value (first-seen processing time) and evaluated only
 # when the digest shows up again: same suppression horizon, zero idle work.
 # The trade: state for never-seen-again digests is not reclaimed until the
-# timer API is viable (transformWithState timers — the environment-blocked
-# tws path, PERF.md), and a TTL decision is processing-time, so a crash
+# timer API is viable (transformWithState timers — they need the protobuf
+# runtime, PERF.md "Retired lanes"), and a TTL decision is processing-time, so a crash
 # replay CAN flip it near the boundary (at-least-once exactly at the
 # horizon edge, exact inside it).
 
@@ -478,7 +412,6 @@ def hll_distinct_stream(
     df: DataFrame,
     group_col: str,
     value_col: str,
-    use_xxhash: bool = True,
 ) -> DataFrame:
     """Streaming distinct-count per group via the portable HLL sketch
     (operators/sketch.py — the r16 batch kernel): state per key is the
@@ -496,12 +429,10 @@ def hll_distinct_stream(
     The hash + register + rho projection runs JVM-side BEFORE the
     stateful exchange (the shared hll_j_rho columns), so the Python
     stage only folds (j, rho) ints into the register vector; the
-    per-batch shuffle carries (group, j, rho) rows. ``use_xxhash=True``
-    (default) is the production hash; pass False for the md5-hash60
-    portable contract (e.g. to compare a stream against a DuckDB-side
-    batch replay). NULL values are dropped — NULL is not a value (the
-    batch operator's rule). Output mode: update (one row per key per
-    batch in which the key received data)."""
+    per-batch shuffle carries (group, j, rho) rows. NULL values are
+    dropped — NULL is not a value (the batch operator's rule). Output
+    mode: update (one row per key per batch in which the key received
+    data)."""
     from pyspark.sql import functions as F
 
     from flink_cdc_multi_spark.operators.sketch import (
@@ -510,7 +441,7 @@ def hll_distinct_stream(
         hll_j_rho,
     )
 
-    j, rho = hll_j_rho(F.col(value_col), use_xxhash=use_xxhash)
+    j, rho = hll_j_rho(F.col(value_col))
     proj = (
         df.filter(F.col(value_col).isNotNull())
         .select(
@@ -576,10 +507,15 @@ def cms_freq_stream(
 
     State is a CONSTANT 8 KB per key no matter how many distinct values
     flow through — the same unbounded-stream property as
-    hll_distinct_stream, for frequencies instead of cardinality. The md5
-    h1/h2 derivation runs JVM-side before the stateful exchange; the
+    hll_distinct_stream, for frequencies instead of cardinality. The
+    xxhash64 h1/h2 derivation runs JVM-side before the stateful exchange; the
     Python stage only folds integer indices (vectorized np.add.at).
-    NULL values are dropped (NULL is not a value). Output mode: update."""
+    NULL values are dropped (NULL is not a value). Output mode: update.
+
+    Checkpoints written while this state was indexed by md5-hash60 (last
+    at commit 076a4ea) must be discarded, not resumed: their counts sit
+    at md5-derived cells, new occurrences land at xxhash64-derived ones,
+    and an estimate could then fall below the true count."""
     import numpy as np
     from pyspark.sql import functions as F
 

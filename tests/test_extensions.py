@@ -2893,7 +2893,8 @@ def test_trained_pq_codewords_roundtrip_and_distortion(spark, tmp_path):
     on residuals. Pins: (a) deterministic — two fits agree bit-exactly;
     (b) the trained codebook quantizes residuals with LOWER distortion
     than the untrained residualized data-vector codebook (the trainer's
-    objective; the recall table lives in PERF.md via tools/recall_pq.py);
+    objective; the recall table lives in PERF.md "r13: residual-TRAINED
+    codewords");
     (c) a trained index round-trips through write_ann_index with
     codebook_scale='residual-trained' and serves IDENTICAL results to
     the inline trained path — i.e. the read path must NOT
@@ -3025,14 +3026,14 @@ def test_drop_duplicate_spans_planted_fixture(spark):
     }
 
 
-def test_drop_duplicate_spans_onepass_matches_join_form(spark):
-    """r17 wave 8: the onepass form (single window-stream derivation via
-    repartition(h) + ReusedExchange, SHJ) must be row-identical to the
-    r14 commonness topology (freq broadcast, probe re-derived) — the
-    restructure is physical only. Hostile shapes: tab/newline
-    whitespace (trim strips spaces ONLY), short docs sharing whole-text
-    windows, a doc whose every window repeats, canonical ties across
-    docs, NULL text, and a doc with exactly n tokens (one window)."""
+def test_drop_duplicate_spans_hostile_rows(spark):
+    """Exact output on hostile shapes: tab/newline whitespace (trim
+    strips spaces ONLY, so the edge tabs split into empty tokens), short
+    docs sharing whole-text windows, a doc whose every window repeats,
+    canonical ties across docs, NULL text (no row), and a doc with
+    exactly n tokens (one window). The expected rows were also produced
+    by the retired broadcast-freq topology (PERF.md "Retired lanes"),
+    so they pin the semantics, not one physical shape."""
     rows = [
         (1, "a b c d e f g a b c d e f g"),
         (2, "a b c d e f g"),
@@ -3046,12 +3047,18 @@ def test_drop_duplicate_spans_onepass_matches_join_form(spark):
         (10, "   "),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for broadcast in (False, True):
-        a = sorted(map(tuple, D.drop_duplicate_spans(
-            df, onepass=False, freq_broadcast=broadcast).collect()))
-        b = sorted(map(tuple, D.drop_duplicate_spans(
-            df, onepass=True).collect()))
-        assert a == b, (a, b)
+    got = sorted(map(tuple, D.drop_duplicate_spans(df).collect()))
+    assert got == [
+        (1, 14, 7, "a b c d e f g"),
+        (2, 7, 7, ""),
+        (3, 7, 5, " "),
+        (4, 7, 7, ""),
+        (6, 5, 0, "one two three four five"),
+        (7, 5, 5, ""),
+        (8, 1, 0, "solo"),
+        (9, 1, 0, ""),
+        (10, 1, 1, ""),
+    ]
 
 
 def test_ext_ann_ivfpq_trained_artifact_contract(spark):
@@ -3569,12 +3576,11 @@ def test_lsh_fused_matches_unfused(spark):
 
 
 def test_hll_xxhash_fast_path(spark, tmp_path):
-    """hll_sketch_over(use_xxhash=True) (r16): the production fast path —
-    one JVM xxhash64 call replaces md5 + base-16 conv (the two measured
-    sf10 scan walls). Statistically equivalent: on the 2000-distinct
-    corpus the estimate must land in the same ~13% stderr band as the
-    md5 form; the plan must contain NO md5/conv, still partial_max, and
-    no Expand/Window (the mergeable-sketch shape is hash-independent)."""
+    """hll_sketch_over (r16): one JVM xxhash64 call replaces md5 +
+    base-16 conv (the two measured sf10 scan walls). On the
+    2000-distinct corpus the estimate must land in the ~13% stderr band;
+    the plan must contain NO md5/conv, still partial_max, and no
+    Expand/Window (the mergeable-sketch shape)."""
     import io
     from contextlib import redirect_stdout
 
@@ -3593,7 +3599,7 @@ def test_hll_xxhash_fast_path(spark, tmp_path):
     toks = df.select(
         "lang", F.explode(F.array_distinct(tokens(F.col("text")))).alias("t")
     )
-    fast = hll_sketch_over(toks, ["lang"], "t", use_xxhash=True)
+    fast = hll_sketch_over(toks, ["lang"], "t")
     buf = io.StringIO()
     with redirect_stdout(buf):
         fast.explain("formatted")
@@ -3609,7 +3615,7 @@ def test_hll_xxhash_fast_path(spark, tmp_path):
     # `empties * 2^59` overflowed int64 for any group with >=16 empty
     # registers — the common case — and ANSI mode turns that into a
     # job-killing ArithmeticException. The 55-cap keeps the whole
-    # harmonic sum < 2^62 for BOTH hash paths.
+    # harmonic sum < 2^62.
     few = spark.createDataFrame(
         [(i, "alpha beta gamma", "en") for i in range(50)],
         "doc_id long, text string, lang string",
@@ -3617,26 +3623,23 @@ def test_hll_xxhash_fast_path(spark, tmp_path):
     ftoks = few.select(
         "lang", F.explode(F.array_distinct(tokens(F.col("text")))).alias("t")
     )
-    frow = hll_sketch_over(ftoks, ["lang"], "t", use_xxhash=True).collect()[0]
+    frow = hll_sketch_over(ftoks, ["lang"], "t").collect()[0]
     assert frow["v_filled"] == 3
     assert 2 <= frow["est_distinct"] <= 5  # LC branch, 3 exact
 
 
 def test_hll_sketch_over_drops_null_values(spark):
-    """r16 review: md5(NULL) is NULL, so an unfiltered NULL value landed a
-    phantom 65th register (F.least turns NULL rho into 55) — v_filled
-    could exceed 64 and the harmonic sum go negative; on the xxhash path
-    NULL silently counted as a distinct value. NULL is not a value: both
-    paths must produce the sketch of the non-null values only."""
+    """r16 review: unfiltered, xxhash64 silently counted NULL as a
+    distinct value. NULL is not a value: the sketch must be that of the
+    non-null values only."""
     from flink_cdc_multi_spark.plans.extensions import hll_sketch_over
 
     df = spark.createDataFrame(
         [("en", "a"), ("en", None), ("en", "b")], "lang string, t string"
     )
-    for xx in (False, True):
-        row = hll_sketch_over(df, ["lang"], "t", use_xxhash=xx).collect()[0]
-        assert row["v_filled"] == 2, (xx, row)
-        assert row["est_distinct"] == 2, (xx, row)
+    row = hll_sketch_over(df, ["lang"], "t").collect()[0]
+    assert row["v_filled"] == 2, row
+    assert row["est_distinct"] == 2, row
 
 
 def test_cms_estimate_dominates_truth(spark):

@@ -699,7 +699,7 @@ def test_onepass_matches_general_path(spark, tmp_path):
 @pytest.mark.parametrize("n_tables", [24, 64])
 def test_onepass_matches_general_path_many_tables(spark, tmp_path, n_tables):
     """Result-equivalence at the widths the r6 crossover sweep measured
-    (tools/sweep_onepass.py, PERF.md): the one-pass path forced ABOVE the
+    (PERF.md "Streaming ingestion"): the one-pass path forced ABOVE the
     shipped 16-table default must still land identical tables + offset +
     status as the general path — the default is a perf knob, not a
     correctness boundary."""

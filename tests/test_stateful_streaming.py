@@ -281,105 +281,6 @@ def test_delta_stream_replay_drop_at_scale(spark, tmp_path):
             spark.conf.set(key, prev)
 
 
-def test_delta_stream_tws_matches_apply(spark, tmp_path):
-    """impl="tws" (transformWithStateInPandas, Spark 4's successor API)
-    must emit exactly the rows impl="apply" emits, batch for batch — both
-    run _delta_core, this pins the plumbing (state round-trip, replay
-    drop, delete handling) across the two engine operators. tws requires
-    the RocksDB provider, so BOTH run under it here. Skipped where the
-    protobuf runtime is absent (tws's Python state protocol needs it —
-    this build container lacks it; see stateful.py docstring)."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf", reason="transformWithState needs protobuf"
-    )
-    from flink_cdc_multi_spark.streaming.stateful import cdc_delta_stream
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        feed = tmp_path / "feed"
-        feed.mkdir()
-        schema = "pk long, g string, v long, _op string, pos long"
-        batches = [
-            [(1, "a", 10, "INSERT", 10), (2, "b", 5, "INSERT", 20)],
-            [
-                (1, "b", 7, "UPDATE", 30),
-                (2, "b", 5, "DELETE", 40),
-                (3, None, 1, "INSERT", 50),   # NULL group key
-                (3, "a", 4, "UPDATE", 60),    # two changes -> one net delta
-            ],
-            [
-                (1, "b", 7, "UPDATE", 30),    # full replay: emits nothing
-                (2, "b", 5, "DELETE", 40),
-                (3, None, 1, "INSERT", 50),
-                (3, "a", 4, "UPDATE", 60),
-            ],
-        ]
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-                str(feed / f"f{i}")
-            )
-
-        def run(impl: str) -> list[list[tuple]]:
-            stream = spark.readStream.schema(schema).option(
-                "maxFilesPerTrigger", "1"
-            ).parquet(str(feed) + "/*")
-            per_batch: list[list[tuple]] = []
-            q = (
-                cdc_delta_stream(stream, "pk", "g", "v", "pos", impl=impl)
-                .writeStream.foreachBatch(
-                    lambda df, _b: per_batch.append(
-                        sorted(
-                            (r["g"], r["d_cnt"], r["d_total"])
-                            for r in df.collect()
-                        )
-                    )
-                )
-                .outputMode("update")
-                .option("checkpointLocation", str(tmp_path / f"ckpt_{impl}"))
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-            return [b for b in per_batch if b]  # drop empty trailing batches
-
-        apply_out, tws_out = run("apply"), run("tws")
-        assert apply_out == tws_out
-        # and both saw real work: inserts, a retraction, and a NULL group
-        flat = [t for b in apply_out for t in b]
-        assert ("a", -1, -10) in flat and (None, 1, 1) in flat
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def test_delta_stream_impl_surface(spark):
-    """The impl switch is a closed vocabulary; "tws" without the protobuf
-    runtime must fail at PLAN TIME with an actionable message, never as a
-    mid-stream StreamingQueryException."""
-    import pytest
-
-    from flink_cdc_multi_spark.streaming.stateful import cdc_delta_stream
-
-    schema = "pk long, g string, v long, _op string, pos long"
-    stream = spark.readStream.schema(schema).parquet("/tmp/nonexistent_feed/*")
-    with pytest.raises(ValueError, match="unknown cdc_delta_stream impl"):
-        cdc_delta_stream(stream, "pk", "g", "v", "pos", impl="bogus")
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="protobuf"):
-            cdc_delta_stream(stream, "pk", "g", "v", "pos", impl="tws")
-
-
 def test_dedup_stream_across_batches(spark, tmp_path):
     """dedup_stream (r15): the streaming exact-dedup twin — within one
     micro-batch the LOWEST order_col copy of each content digest is

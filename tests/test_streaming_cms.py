@@ -5,8 +5,9 @@ against a pure-Python reference that shares cms_indices_py, across batch
 splits and a checkpoint restart; the one-sided est ≥ truth guarantee is
 asserted on every emission."""
 
-import hashlib
 import json
+
+from test_xxh64_sql import xxh64_py
 
 from flink_cdc_multi_spark.operators.sketch import (
     CMS_D,
@@ -17,8 +18,10 @@ from flink_cdc_multi_spark.streaming.stateful import cms_freq_stream
 
 
 def _h1_h2(value: str) -> tuple[int, int]:
-    h = int(hashlib.md5(value.encode()).hexdigest()[:15], 16)
-    return h % (CMS_W * 4096), (h >> 30) | 1
+    # the cms_h1_h2 split on the UNSIGNED xxhash64 (seed 42) — xxh64_py
+    # is pinned bit-exact against Spark's F.xxhash64 in test_xxh64_sql
+    h = xxh64_py(value.encode("utf-8"))
+    return h & (CMS_W * 4096 - 1), (h >> 30) | 1
 
 
 def _reference_estimates(all_values: list[str], probes: list[str]) -> dict:

@@ -2,12 +2,9 @@
 the operator's contract is EXACT merge equivalence — the streaming state
 after any batch split equals the batch sketch over the union of all rows so
 far, bit-for-bit (registers merge by max). Pinned here against
-hll_sketch_over on the same rows, on both hash paths, across a checkpoint
-restart."""
+hll_sketch_over on the same rows, across a checkpoint restart."""
 
 import json
-
-import pytest
 
 from flink_cdc_multi_spark.plans.extensions import hll_sketch_over
 from flink_cdc_multi_spark.streaming.stateful import hll_distinct_stream
@@ -32,19 +29,17 @@ def _latest(emissions):
     return out
 
 
-def _batch_sketch(spark, feed, use_xxhash):
+def _batch_sketch(spark, feed):
     df = spark.read.schema("lang string, token string").json(str(feed))
     return {
         r["lang"]: (r["v_filled"], r["harmonic_scaled"], r["est_distinct"])
         for r in hll_sketch_over(
-            df.filter("token is not null"), ["lang"], "token",
-            use_xxhash=use_xxhash,
+            df.filter("token is not null"), ["lang"], "token"
         ).collect()
     }
 
 
-@pytest.mark.parametrize("use_xxhash", [False, True])
-def test_stream_equals_batch_sketch_across_batches(spark, tmp_path, use_xxhash):
+def test_stream_equals_batch_sketch_across_batches(spark, tmp_path):
     feed = tmp_path / "feed"
     feed.mkdir()
     _feed_file(feed, "f1.jsonl",
@@ -61,7 +56,7 @@ def test_stream_equals_batch_sketch_across_batches(spark, tmp_path, use_xxhash):
         .option("maxFilesPerTrigger", "1")
         .json(str(feed))
     )
-    out = hll_distinct_stream(stream, "lang", "token", use_xxhash=use_xxhash)
+    out = hll_distinct_stream(stream, "lang", "token")
     emissions = []
     q = (
         out.writeStream.foreachBatch(
@@ -75,7 +70,7 @@ def test_stream_equals_batch_sketch_across_batches(spark, tmp_path, use_xxhash):
     q.stop()
 
     got = _latest(emissions)
-    want = _batch_sketch(spark, feed, use_xxhash)
+    want = _batch_sketch(spark, feed)
     assert got == want
     # accuracy sanity at this cardinality (en: 60 distinct, fr: 4):
     # m=64 registers → ~13% stderr, so allow ±10 on 60
@@ -95,7 +90,7 @@ def test_stream_state_survives_restart(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .json(str(feed))
         )
-        out = hll_distinct_stream(stream, "lang", "token", use_xxhash=False)
+        out = hll_distinct_stream(stream, "lang", "token")
         emissions = []
         q = (
             out.writeStream.foreachBatch(
@@ -114,4 +109,4 @@ def test_stream_state_survives_restart(spark, tmp_path):
     # ADDS w15..w44 — the merged result must equal the batch over all rows
     _feed_file(feed, "f2.jsonl", _rows("en", [f"w{i}" for i in range(15, 45)]))
     got = _latest(run())
-    assert got == _batch_sketch(spark, feed, use_xxhash=False)
+    assert got == _batch_sketch(spark, feed)

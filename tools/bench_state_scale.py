@@ -3,11 +3,7 @@ with 1M+ distinct pks under the RocksDB state store and record per-batch
 wall-clock + state-store metrics, proving per-batch work is
 O(batch + touched keys), not O(total keys).
 
-    python tools/bench_state_scale.py [n_keys] [n_touch] [impl]
-
-``impl`` = apply (default, applyInPandasWithState) or tws
-(transformWithStateInPandas, Spark 4's successor API) — the A/B for
-VERDICT r10 item 7 runs both at the same key counts.
+    python tools/bench_state_scale.py [n_keys] [n_touch]
 
 Batches (files land one at a time; each drain = one micro-batch):
   b1  n_keys INSERTs (builds the full state)        — O(n_keys), the bar
@@ -57,7 +53,6 @@ def make_batch(spark, n: int, op: str, pos_base: int, stride: int = 1):
 def main() -> None:
     n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_touch = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000
-    impl = sys.argv[3] if len(sys.argv) > 3 else "apply"
     work = tempfile.mkdtemp(prefix="state_scale_")
     spark = get_spark("state-scale")
     spark.conf.set(
@@ -76,15 +71,14 @@ def main() -> None:
     )
     counts: list[int] = []
     q = (
-        cdc_delta_stream(stream, "pk", "g", "v", "pos", impl=impl)
+        cdc_delta_stream(stream, "pk", "g", "v", "pos")
         .writeStream.foreachBatch(lambda df, _b: counts.append(df.count()))
         .outputMode("update")
         .option("checkpointLocation", f"{work}/ckpt")
         .start()
     )
 
-    report: dict = {"n_keys": n_keys, "n_touch": n_touch, "impl": impl,
-                    "batches": []}
+    report: dict = {"n_keys": n_keys, "n_touch": n_touch, "batches": []}
 
     def drain(label: str) -> None:
         t0 = time.perf_counter()
