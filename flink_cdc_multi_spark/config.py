@@ -78,16 +78,6 @@ class JobConfig:
     # with a warning (the option is global across heterogeneous tables).
     compaction_zorder_columns: list[str] = field(default_factory=list)
     debug: bool = False  # --debug print sink (FlinkCDCMulti.java:148-154)
-    # one-pass streaming control plane: when a job has ≤ this many data
-    # tables (and no name maps / snapshot-only / debug), the per-batch
-    # control-plane aggregation rides the data write job as observed
-    # metrics — one Spark job per micro-batch instead of two-plus-cache.
-    # 0 disables the fast path. Default from the r5 controlled sweep
-    # (PERF.md: one session, modes alternated, min-of-3, sf0.1 feed):
-    # one-pass beat the general path at EVERY measured table count
-    # (2/4/8/16, by 13/10/14/4%), so the bound sits at the edge of
-    # measurement rather than an unmeasured guess.
-    onepass_max_tables: int = 16
     # opt-in content-level duplicate suppression for at-least-once
     # transports (Kafka re-produced records, polling overlap, replayed
     # feeds): the envelope stream passes through streaming/stateful.
@@ -225,7 +215,6 @@ class JobConfig:
                 cfg.get("compaction.zorder.columns") or []
             ),
             debug=str(cfg.get("debug", "false")).lower() == "true",
-            onepass_max_tables=int(cfg.get("streaming.onepass.max.tables", 16)),
             dedup_redelivery_suppress=str(
                 cfg.get("dedup.redelivery.suppress", "false")
             ).lower()

@@ -24,8 +24,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 OP_READ = "READ"
@@ -33,9 +31,6 @@ OP_INSERT = "INSERT"
 OP_UPDATE = "UPDATE"
 OP_DELETE = "DELETE"
 OPS = (OP_READ, OP_INSERT, OP_UPDATE, OP_DELETE)
-
-# Oracle op codes (OracleDebeziumToJSONDeserializer.java:44-63)
-_ORACLE_OPS = {"r": OP_READ, "c": OP_INSERT, "u": OP_UPDATE, "d": OP_DELETE}
 
 
 @dataclass(frozen=True)
@@ -113,37 +108,3 @@ SOURCE_KINDS = {k.name: k for k in (MYSQL, POSTGRES, ORACLE, MONGODB)}
 # Columns the router strips before the sink (SideInputProcessFunction.java:54-63):
 # routing identity always; offset cols only for non-DDL records.
 ROUTING_COLS = ("_db", "_tbl", "_database", "_coll")
-
-
-def meta_schema(kind: SourceKind) -> T.StructType:
-    return T.StructType(kind.meta_fields)
-
-
-def normalize_op(op: Column, source: str = "mysql", snapshotting: Column | None = None) -> Column:
-    """Map source-specific op codes to the canonical vocabulary.
-
-    Oracle: r/c/u/d → READ/INSERT/UPDATE/DELETE
-    Mongo: REPLACE → UPDATE; INSERT during snapshot → READ
-    MySQL/PG: already canonical (Debezium Envelope.operationFor).
-    """
-    if source == "oracle":
-        out = op
-        for code, canon in _ORACLE_OPS.items():
-            out = F.when(op == code, canon).otherwise(out)
-        return out
-    if source == "mongodb":
-        out = F.when(op == "REPLACE", OP_UPDATE).otherwise(op)
-        if snapshotting is not None:
-            out = F.when(snapshotting & (out == OP_INSERT), OP_READ).otherwise(out)
-        return out
-    return op
-
-
-def ts_with_fallback(ts: Column) -> Column:
-    """_ts < 1 → wall clock millis (MySQLDebeziumToJSONDeserializer.java:166)."""
-    return F.when(ts < 1, F.unix_millis(F.current_timestamp())).otherwise(ts)
-
-
-def pick_image(op: Column, before: Column, after: Column) -> Column:
-    """DELETE carries the before-image, everything else the after-image."""
-    return F.when(op == OP_DELETE, before).otherwise(after)

@@ -14,8 +14,3 @@ from pyspark.sql import functions as F
 def dt_bucket(ts_millis: Column) -> Column:
     """epoch ms → 'yyyy-MM-dd' partition value (T7)."""
     return F.date_format(F.timestamp_millis(ts_millis), "yyyy-MM-dd")
-
-
-def format_datetime(ts_millis: Column) -> Column:
-    """epoch ms → 'yyyy-MM-dd HH:mm:ss' (T9)."""
-    return F.date_format(F.timestamp_millis(ts_millis), "yyyy-MM-dd HH:mm:ss")

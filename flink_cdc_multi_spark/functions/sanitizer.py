@@ -19,11 +19,3 @@ def sanitize(name: str) -> str:
 
 def sanitize_col(col: Column) -> Column:
     return F.translate(col, "-.", "__")
-
-
-def reverse_sanitize_table(sanitized: str) -> str:
-    """Reconstruct the 'original' table name the way the reference does for
-    table.name.map lookups — '_' → '-' (SideInputProcessFunction.java:86-88).
-    Lossy by design (a genuine '_' also becomes '-'); reproduced verbatim
-    because name-map keys are written against this behavior."""
-    return sanitized.replace("_", "-")

@@ -69,15 +69,6 @@ def latest_image(
     return latest
 
 
-def deletes_applied_count(changes: DataFrame, key_cols: list[str], order_cols: list[str]) -> int:
-    """Keys whose latest change is a DELETE (rows removed by materialization)."""
-    return (
-        latest_image(changes, key_cols, order_cols, drop_deletes=False)
-        .filter(F.col("_op") == OP_DELETE)
-        .count()
-    )
-
-
 def _hadoop_fs(spark, path_str: str):
     """(FileSystem, Path) for any supported scheme — file://, hdfs://,
     s3a://. The storage abstraction the reference gets from Flink's

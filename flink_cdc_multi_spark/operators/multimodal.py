@@ -1787,21 +1787,6 @@ def wav_pcm16_stats(blob: bytes):
     return int(sr), int(a.size), int(ab.sum()), int(ab.max()) if a.size else 0
 
 
-def attach_media_meta(df: DataFrame, binary_col: str, media_type: str, fmt: str) -> DataFrame:
-    """Wrap an opaque binary column with the typed metadata struct (decode
-    fills width/height/duration later)."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(fmt).alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-        ),
-    )
-
-
 def _fake_luma(blob: bytes) -> float:
     """Deterministic fake mean-luma derived from an md5 of the bytes
     (Python's builtin hash() is per-process salted — not reproducible).

@@ -42,11 +42,6 @@ class RouteResult:
     ddl_rows: int = 0
 
 
-def observed_tables(envelope: DataFrame) -> list[tuple[str, str]]:
-    rows = envelope.select("_db", "_tbl").distinct().collect()
-    return [(r["_db"], r["_tbl"]) for r in rows]
-
-
 def keep_meta_cols(source_name: str) -> list[str]:
     """Sink metadata the reference keeps on data tables
     (SideInputProcessFunction.java:54-63)."""
@@ -200,8 +195,8 @@ def publish_batch_parquet(typed: DataFrame, table_path: str,
             # this batch's rows were folded into a compacted rewrite
             # whose epoch never reached the checkpoint commit — replaying
             # the publish would duplicate them next to the image. The
-            # plan must still EXECUTE (noop sink): the one-pass streaming
-            # path rides its control-plane Observation on this job and
+            # plan must still EXECUTE (noop sink): the streaming batch
+            # body rides its control-plane Observation on this job and
             # would block forever on obs.get otherwise.
             typed.write.format("noop").mode("overwrite").save()
             return
@@ -287,7 +282,7 @@ def _publish_manifest(typed: DataFrame, table_path: str, batch_id) -> None:
     # can prune WHOLE BATCHES driver-side — the Iceberg-manifest pruning
     # shape; at 100 TB a dt-filtered read skips every non-overlapping
     # batch without touching a footer. Multiple observations per job
-    # compose (the one-pass control plane may ride this same write).
+    # compose (the streaming control plane may ride this same write).
     dt_stats = None
     if "dt" in typed.columns:
         from pyspark.sql import Observation
@@ -611,21 +606,41 @@ def _promote_staging(spark, table_path: str, staging: str,
     fs.delete(sp, True)
 
 
+def publish_table(
+    envelope: DataFrame,
+    registry: TableRegistry,
+    spec: TableSpec,
+    db: str,
+    tbl: str,
+    sink_path: str,
+    source_id: str,
+    batch_id: int | str | None,
+) -> None:
+    """Publish the batch's rows of source identity (db, tbl) to ``spec``'s
+    table: typed projection, ``dt`` bucket, exactly-once publish."""
+    typed = project_table(envelope, registry, spec, db, tbl)
+    typed = typed.withColumn("dt", dt_bucket(F.col("_ts")))
+    publish_batch_parquet(
+        typed, f"{sink_path}/{source_id}_{spec.output_name}", batch_id
+    )
+
+
 def route_batch(
     envelope: DataFrame,
     registry: TableRegistry,
     sink_path: str,
     source_id: str,
-    write: bool = True,
     resolve_unknown=None,
-    counts: dict | None = None,
+    counts=None,
     batch_id: int | str | None = None,
 ) -> RouteResult:
     """Demux one (micro-)batch to per-table parquet publishes.
 
-    ``counts``: precomputed ``{(db, tbl): n}`` for the batch (the streaming
-    pipeline already has it from its one-pass batch_summary); when None,
-    computed here with one grouped job.
+    ``counts``: the (db, tbl) identities to route — either precomputed
+    ``{(db, tbl): n}`` row counts or just the set of identities the caller
+    observed in the batch (each is then written, and ``per_table_rows``
+    stays empty for lack of counts); when None, counts are computed here
+    with one grouped job.
 
     ``batch_id``: when set, writes publish through the exactly-once
     staging/promote path (publish_batch_parquet) so a replayed batch
@@ -634,8 +649,7 @@ def route_batch(
     result = RouteResult()
     # Cache ownership: if the caller already persisted the batch (as
     # streaming/pipeline.process_batch does), don't persist/unpersist here —
-    # the finally-unpersist would evict the caller's cache mid-batch and
-    # force a recompute for its offset/status aggregations.
+    # the finally-unpersist would evict the caller's cache mid-batch.
     owns_cache = not envelope.is_cached
     if owns_cache:
         envelope = envelope.persist()
@@ -647,6 +661,8 @@ def route_batch(
                 (r["_db"], r["_tbl"]): r["n"]
                 for r in envelope.groupBy("_db", "_tbl").agg(F.count("*").alias("n")).collect()
             }
+        elif not isinstance(counts, dict):
+            counts = dict.fromkeys(counts)  # identities only, counts unknown
         routed: list[tuple[str, str, TableSpec]] = []
         for db, tbl in counts:
             spec = registry.lookup(db, tbl)
@@ -666,34 +682,29 @@ def route_batch(
                 f"unknown tables: {result.unknown_tables}; known: {sorted(registry.specs)}"
             )
 
-        def _write_one(db: str, tbl: str, spec: TableSpec) -> None:
-            typed = project_table(envelope, registry, spec, db, tbl)
-            typed = typed.withColumn("dt", dt_bucket(F.col("_ts")))
-            publish_batch_parquet(
-                typed, f"{sink_path}/{source_id}_{spec.output_name}", batch_id
-            )
-
         for db, tbl, spec in routed:
             n = counts[(db, tbl)]
+            if n is None:
+                continue
             if spec.is_ddl:
                 result.ddl_rows += n
             else:
                 result.per_table_rows[spec.key] = result.per_table_rows.get(spec.key, 0) + n
 
-        if write:
-            # Per-table writers are independent jobs over the cached batch —
-            # submit them concurrently and let the scheduler pack the cores
-            # (a K-table CDC stream shouldn't serialize K writes).
-            from concurrent.futures import ThreadPoolExecutor
+        # Per-table writers are independent jobs over the cached batch —
+        # submit them concurrently and let the scheduler pack the cores
+        # (a K-table CDC stream shouldn't serialize K writes).
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=min(8, max(1, len(routed)))) as ex:
-                futures = [
-                    ex.submit(_write_one, db, tbl, spec)
-                    for db, tbl, spec in routed
-                    if counts[(db, tbl)] > 0
-                ]
-                for f in futures:
-                    f.result()  # propagate the first failure
+        with ThreadPoolExecutor(max_workers=min(8, max(1, len(routed)))) as ex:
+            futures = [
+                ex.submit(publish_table, envelope, registry, spec, db, tbl,
+                          sink_path, source_id, batch_id)
+                for db, tbl, spec in routed
+                if counts[(db, tbl)] != 0
+            ]
+            for f in futures:
+                f.result()  # propagate the first failure
         return result
     finally:
         if owns_cache:

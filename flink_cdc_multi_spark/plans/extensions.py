@@ -21,6 +21,7 @@ Oracle-parity design rules:
 
 from __future__ import annotations
 
+import atexit
 import os
 import threading
 
@@ -39,6 +40,26 @@ from flink_cdc_multi_spark.plans.queries import load_table
 # install a fresh dict over one that already holds a built entry
 # (r13 review finding: ext_dedup_clusters was the second installer)
 _ANN_INDEX_BUILD_LOCK = threading.Lock()
+
+# per-process index artifact dirs this process built under the temp dir;
+# nothing else ever reads them, so they go when the interpreter exits
+_OWN_TMP_DIRS: set[str] = set()
+
+
+def _remove_own_tmp_dirs() -> None:
+    import shutil
+
+    for path in _OWN_TMP_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+atexit.register(_remove_own_tmp_dirs)
+
+
+def _own_tmp_dir(path: str) -> str:
+    """Mark ``path`` for removal at interpreter exit; returns it."""
+    _OWN_TMP_DIRS.add(path)
+    return path
 
 
 def _session_cache(spark) -> dict:
@@ -342,6 +363,7 @@ def ext_dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _semantic_trained_path()
     with _ANN_INDEX_BUILD_LOCK:
         if cache.get("semdedup_trained_sf") != sf_dir:
+            _own_tmp_dir(path)
             emb = load_table(spark, sf_dir, "embeddings").filter(
                 F.col("vec_id") < 5000
             )
@@ -620,9 +642,9 @@ def ext_ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             # serve stale codes, and per-PROCESS so two concurrent gate/bench
             # runs can't race each other's overwrite mid-read
             tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-            path = os.path.join(
+            path = _own_tmp_dir(os.path.join(
                 tempfile.gettempdir(), f"fcm_annidx_{os.getpid()}_{tag}"
-            )
+            ))
             S.write_ann_index(corpus, centroids, codebook, path, m=8)
             cache[key] = path
     emb = load_table(spark, sf_dir, "embeddings")
@@ -669,6 +691,7 @@ def ext_ann_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _trained_index_path()
     with _ANN_INDEX_BUILD_LOCK:
         if cache.get("ann_trained_sf") != sf_dir:
+            _own_tmp_dir(path)
             emb = load_table(spark, sf_dir, "embeddings")
             corpus = emb.filter(F.col("vec_id") >= 20)
             tc = S.train_ivf_centroids(corpus, n_cells=16, dim=64)

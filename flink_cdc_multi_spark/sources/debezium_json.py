@@ -276,27 +276,6 @@ def decode_raw(
     )
 
 
-def unwrap_mongo_extended_json(payload: DataFrame | None = None):
-    """Column rewriter for Mongo extended-JSON ``$``-wrappers
-    ($numberLong/$date/$oid/$numberDecimal/$numberDouble/$timestamp —
-    MongoDBDebeziumToJSONDeserializer.java:123-135). Applied per field at
-    projection time: coalesce of the wrapped extraction and the raw value."""
-
-    def unwrap(col_json: F.Column, field: str) -> F.Column:
-        base = f"$.{field}"
-        return F.coalesce(
-            F.get_json_object(col_json, base + ".$numberLong"),
-            F.get_json_object(col_json, base + ".$numberDecimal"),
-            F.get_json_object(col_json, base + ".$numberDouble"),
-            F.get_json_object(col_json, base + ".$date"),
-            F.get_json_object(col_json, base + ".$oid"),
-            F.get_json_object(col_json, base + ".$timestamp.t"),
-            F.get_json_object(col_json, base),
-        )
-
-    return unwrap
-
-
 def read_raw_batch(spark: SparkSession, path: str, source_type: str,
                    schemas_enable: bool = False) -> DataFrame:
     return decode_raw(spark.read.text(path), source_type,

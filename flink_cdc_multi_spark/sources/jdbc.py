@@ -111,23 +111,6 @@ def discover_bounds(
     return int(probe["mn"]), int(probe["mx"]), int(probe["cnt"])
 
 
-def snapshot_read(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    key: str,
-    user: str,
-    password: str,
-    split_size: int = DEFAULT_SPLIT_SIZE,
-    fetch_size: int = DEFAULT_FETCH_SIZE,
-) -> DataFrame:
-    """Chunked parallel snapshot of one table."""
-    mn, mx, cnt = discover_bounds(spark, url, table, key, user, password)
-    plan = plan_splits(mn, mx, cnt, split_size)
-    opts = jdbc_options(url, table, user, password, key, plan, fetch_size)
-    return spark.read.format("jdbc").options(**opts).load()
-
-
 def snapshot_to_envelope(df: DataFrame, db: str, table: str, ts_ms: int) -> DataFrame:
     """Batch rows → snapshot READ envelope rows (payload as JSON string, the
     same wire shape the streaming decoder produces), so the routing/sink

@@ -30,49 +30,50 @@ _MYSQL_OFFSET_RE = re.compile(r"^[^,]+,[0-9]+$")
 _NUMERIC_RE = re.compile(r"^[0-9]+$")
 
 
-def reduce_offset(envelope: DataFrame, source_type: str) -> str | None:
-    """One (micro-)batch → the offset string to persist, or None if the batch
-    carries no offset-bearing records (snapshot READs are skipped — they
-    have no binlog/LSN position, BinlogOffsetStoreProcessFunction.java:42-47;
-    DDL records DO carry offsets and count)."""
+def offset_agg(source_type: str) -> "F.Column":
+    """The batch's offset as ONE ungrouped aggregate (usable in ``agg`` and
+    as a ``df.observe`` metric): null when the batch carries no
+    offset-bearing records. Snapshot READs are skipped — they have no
+    binlog/LSN position (BinlogOffsetStoreProcessFunction.java:42-47);
+    DDL records DO carry offsets and count. ``_offset_str`` renders it."""
+    not_read = F.col("_op").isNull() | (F.col("_op") != OP_READ)
     if source_type == "mysql":
-        rows = envelope.filter(
-            (F.col("_op").isNull() | (F.col("_op") != OP_READ))
-            & F.col("_binlog_file").isNotNull()
-        )
-        row = rows.agg(
-            F.max_by(
-                F.struct("_binlog_file", "_binlog_pos_end"),
-                F.struct("_binlog_file", "_binlog_pos_end"),
-            ).alias("o")
-        ).first()
-        if row is None or row["o"] is None:
-            return None
-        return f"{row['o']['_binlog_file']},{row['o']['_binlog_pos_end']}"
+        has = not_read & F.col("_binlog_file").isNotNull()
+        pos = F.when(has, F.struct("_binlog_file", "_binlog_pos_end"))
+        return F.max_by(pos, pos)  # null-ordering rows are skipped
     if source_type == "postgres":
-        row = envelope.filter(
-            (F.col("_op").isNull() | (F.col("_op") != OP_READ)) & F.col("_lsn").isNotNull()
-        ).agg(F.max("_lsn").alias("o")).first()
-        return None if row is None or row["o"] is None else str(row["o"])
+        return F.max(F.when(not_read & F.col("_lsn").isNotNull(), F.col("_lsn")))
     if source_type == "oracle":
         # ST7 emits _scn on change; batch equivalent: numerically-last SCN.
         # try_cast: a malformed SCN string on one corrupt line must not
         # ANSI-crash the whole offset reduction — it degrades to null and
         # falls out of the max (same family as the tableChanges fuzz find)
-        row = (
-            envelope.filter(F.col("_scn").isNotNull() & (F.col("_scn") != "0"))
-            .agg(F.max(F.col("_scn").try_cast("decimal(38,0)")).alias("o"))
-            .first()
+        return F.max(
+            F.when(
+                F.col("_scn").isNotNull() & (F.col("_scn") != "0"),
+                F.col("_scn").try_cast("decimal(38,0)"),
+            )
         )
-        return None if row is None or row["o"] is None else str(row["o"])
     if source_type == "mongodb":
-        row = (
-            envelope.filter(F.col("_op") != OP_READ)
-            .agg(F.max("_ts").alias("o"))
-            .first()
-        )
-        return None if row is None or row["o"] is None else str(row["o"])
+        return F.max(F.when(F.col("_op") != OP_READ, F.col("_ts")))
     raise ValueError(f"unknown source type: {source_type}")
+
+
+def _offset_str(o, source_type: str) -> str | None:
+    """``offset_agg`` value → offset string (mysql 'file,pos', pg LSN,
+    oracle SCN, mongo ts)."""
+    if o is None:
+        return None
+    if source_type == "mysql":
+        return f"{o['_binlog_file']},{o['_binlog_pos_end']}"
+    return str(o)
+
+
+def reduce_offset(envelope: DataFrame, source_type: str) -> str | None:
+    """One (micro-)batch → the offset string to persist, or None if the batch
+    carries no offset-bearing records (see ``offset_agg``)."""
+    row = envelope.agg(offset_agg(source_type).alias("o")).first()
+    return _offset_str(row["o"], source_type)
 
 
 def offset_greater(a: str, b: str, source_type: str) -> bool:

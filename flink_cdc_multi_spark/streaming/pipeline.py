@@ -7,14 +7,18 @@ Topology parity with the reference (SURVEY.md §3.2-3.3):
             keyBy(null) → router → [per-table map→FileSink]
             (+ offset-store branch, + status-store branch, checkpoint-aligned)
 
-    here:   readStream(text) → decode_raw (envelope) → foreachBatch:
-              1. route_batch: per-table typed parquet publish (dt-bucketed,
-                 EXACTLY-ONCE under replay: batch-keyed staging/promote,
+    here:   readStream(text) → decode_raw (envelope) → foreachBatch
+            (CDCPipeline.process_batch, the one batch body):
+              1. per-table typed parquet publish (dt-bucketed, EXACTLY-ONCE
+                 under replay: batch-keyed staging/promote,
                  operators/routing.publish_batch_parquet — the reference's
-                 roll-on-checkpoint parity, FlinkCDCMulti.java:373-389)
-              2. reduce_offset → offset file   (after writes; the offset
-                 FILE itself stays at-least-once — resume over-replay is
-                 filtered by resume_filter)
+                 roll-on-checkpoint parity, FlinkCDCMulti.java:373-389).
+                 The first write job carries the control-plane reads as
+                 one Observation (control_metric_aggs); route_batch
+                 publishes the other observed tables concurrently
+              2. offset (sources/offsets.offset_agg) → offset file (after
+                 writes; the offset FILE itself stays at-least-once —
+                 resume over-replay is filtered by resume_filter)
               3. status accumulate → status file
               4. control: DDL classification / snapshot-completion → stop
 
@@ -39,11 +43,13 @@ from flink_cdc_multi_spark.catalog import TableRegistry
 from flink_cdc_multi_spark.config import JobConfig
 from flink_cdc_multi_spark.envelope import OP_READ
 from flink_cdc_multi_spark.operators.ddl import DDLDecision, classify, is_truncate
-from flink_cdc_multi_spark.operators.routing import route_batch
+from flink_cdc_multi_spark.operators.routing import publish_table, route_batch
 from flink_cdc_multi_spark.sources.debezium_json import read_raw_stream
 from flink_cdc_multi_spark.sources import fsio
 from flink_cdc_multi_spark.sources.offsets import (
     OffsetFileStore,
+    _offset_str,
+    offset_agg,
     offset_greater,
     resume_filter,
 )
@@ -52,131 +58,41 @@ from flink_cdc_multi_spark.streaming.status import StatusStore
 LOG = logging.getLogger(__name__)
 
 
-def batch_summary(envelope: DataFrame, source_type: str) -> list:
-    """ONE grouped aggregation per micro-batch carrying every control-plane
-    read: per-(db,tbl) counts, snapshot-completion flags (ST1), max event
-    ts (ST8), DDL statements (F3/F4), and the per-source offset reduction
-    (ST4-ST7, same predicates as sources/offsets.reduce_offset). Each of
-    these was previously its own job; at streaming cadence the per-job
-    scheduling floor — not the data — dominated the batch, and at cluster
-    scale five passes over the batch are four too many. Returns the
-    collected per-group rows (~|tables|, bounded)."""
-    not_read = F.col("_op").isNull() | (F.col("_op") != OP_READ)
-    aggs = [
-        F.count("*").alias("n"),
-        # null for groups with no op-bearing rows (pure-DDL groups)
-        F.max(F.when(F.col("_op").isNotNull(), F.col("_op") != OP_READ)).alias(
-            "non_read"
-        ),
-        F.max("_ts").alias("max_ts"),
-        F.collect_list(
-            F.when(F.col("_ddl").isNotNull(), F.struct("_ddl", "_ddl_tbl"))
-        ).alias("ddl"),
-    ]
-    if source_type == "mysql":
-        has = not_read & F.col("_binlog_file").isNotNull()
-        pos = F.when(has, F.struct("_binlog_file", "_binlog_pos_end"))
-        aggs.append(F.max_by(pos, pos).alias("offset"))  # null ord rows skipped
-    elif source_type == "postgres":
-        aggs.append(F.max(F.when(not_read & F.col("_lsn").isNotNull(), F.col("_lsn"))).alias("offset"))
-    elif source_type == "oracle":
-        aggs.append(
-            F.max(
-                F.when(
-                    F.col("_scn").isNotNull() & (F.col("_scn") != "0"),
-                    F.col("_scn").try_cast("decimal(38,0)"),  # malformed SCN -> null, not ANSI crash
-                )
-            ).alias("offset")
-        )
-    elif source_type == "mongodb":
-        aggs.append(F.max(F.when(F.col("_op") != OP_READ, F.col("_ts"))).alias("offset"))
-    else:
-        raise ValueError(f"unknown source type: {source_type}")
-    return envelope.groupBy("_db", "_tbl").agg(*aggs).collect()
-
-
-def _offset_str(o, source_type: str) -> str | None:
-    """Offset aggregate value → offset string (same formats as
-    reduce_offset: mysql 'file,pos', pg LSN, oracle SCN, mongo ts)."""
-    if o is None:
-        return None
-    if source_type == "mysql":
-        return f"{o['_binlog_file']},{o['_binlog_pos_end']}"
-    return str(o)
-
-
-def summary_offset(rows: list, source_type: str) -> str | None:
-    """Fold per-group offsets to the batch offset string."""
-    best: str | None = None
-    for r in rows:
-        s = _offset_str(r["offset"], source_type)
-        if s is None:
-            continue
-        if best is None or offset_greater(s, best, source_type):
-            best = s
-    return best
-
-
 def control_metric_aggs(source_type: str) -> list:
-    """Global (ungrouped) twins of batch_summary's aggregates, legal as
-    ``df.observe`` metrics: the one-pass streaming path attaches these to
-    the data write job so the control plane costs ZERO extra Spark jobs per
-    micro-batch. collect_set/collect_list outputs are bounded by |tables| and
-    DDL volume (~zero), never by batch size."""
+    """The batch's control-plane reads as global aggregates, legal as
+    ``df.observe`` metrics: they ride the batch's first write job, so the
+    control plane costs no Spark job of its own. Row count, max event ts
+    (ST8), the observed data identities with a per-row non-READ flag
+    (snapshot-only completion, ST1), the DDL slice (F3/F4) and the offset
+    reduction (ST4-ST7, sources/offsets.offset_agg). collect_set /
+    collect_list outputs are bounded by 2×|tables| and DDL volume (~zero),
+    never by batch size."""
     from flink_cdc_multi_spark.catalog import _DDL_OFFSET_FIELDS
 
-    not_read = F.col("_op").isNull() | (F.col("_op") != OP_READ)
     ddl_payload_cols = ["_ddl", "_ddl_tbl", "_ts"] + [
         f.name for f in _DDL_OFFSET_FIELDS.get(source_type, [])
     ]
-    aggs = [
+    # null for rows without an op (they neither complete nor process a table)
+    non_read = F.when(F.col("_op").isNotNull(), F.col("_op") != OP_READ)
+    return [
         F.count(F.lit(1)).alias("n"),
         F.max("_ts").alias("max_ts"),
         F.collect_set(
-            F.when(F.col("_ddl").isNull(), F.struct("_db", "_tbl"))
+            F.when(
+                F.col("_ddl").isNull(),
+                F.struct("_db", "_tbl", non_read.alias("non_read")),
+            )
         ).alias("tables"),
         F.collect_list(
             F.when(F.col("_ddl").isNotNull(), F.struct("_db", *ddl_payload_cols))
         ).alias("ddl"),
+        offset_agg(source_type).alias("offset"),
     ]
-    if source_type == "mysql":
-        has = not_read & F.col("_binlog_file").isNotNull()
-        pos = F.when(has, F.struct("_binlog_file", "_binlog_pos_end"))
-        aggs.append(F.max_by(pos, pos).alias("offset"))
-    elif source_type == "postgres":
-        aggs.append(
-            F.max(F.when(not_read & F.col("_lsn").isNotNull(), F.col("_lsn"))).alias(
-                "offset"
-            )
-        )
-    elif source_type == "oracle":
-        aggs.append(
-            F.max(
-                F.when(
-                    F.col("_scn").isNotNull() & (F.col("_scn") != "0"),
-                    F.col("_scn").try_cast("decimal(38,0)"),  # malformed SCN -> null, not ANSI crash
-                )
-            ).alias("offset")
-        )
-    elif source_type == "mongodb":
-        aggs.append(F.max(F.when(F.col("_op") != OP_READ, F.col("_ts"))).alias("offset"))
-    else:
-        raise ValueError(f"unknown source type: {source_type}")
-    return aggs
 
 
-def registry_from_config(cfg: JobConfig, tables) -> TableRegistry:
-    """TableRegistry wired from a JobConfig: name maps, unknown-table
-    policy, mongo deserialization mode (configureTableNameMap,
-    FlinkCDCMulti.java:112)."""
-    return TableRegistry.build(
-        cfg.source_type,
-        tables,
-        database_name_map=cfg.database_name_map,
-        table_name_map=cfg.table_name_map,
-        fail_on_unknown_tables=cfg.fail_on_unknown_tables,
-        mongo_mode=cfg.mongodb_deserialization_mode,
-    )
+def _identity(spec) -> tuple[str, str]:
+    """The (db, tbl) source identity a spec's own key names."""
+    return tuple(spec.key.split(".", 1))
 
 
 class SnapshotPhaseError(RuntimeError):
@@ -418,37 +334,6 @@ class CDCPipeline:
         self.stage_seconds[stage] = self.stage_seconds.get(stage, 0.0) + (now - t0)
         return now
 
-    def _onepass_eligible(self) -> bool:
-        """The one-job-per-batch control plane applies when: no debug print
-        sink, not snapshot-only (its post-completion filter needs counts
-        before writes), no name maps (spec key ↔ envelope identity must be
-        invertible), and few enough data tables that per-spec write jobs
-        beat a shared cached pre-pass."""
-        cfg = self.config
-        if cfg.debug or cfg.snapshot_only or cfg.onepass_max_tables <= 0:
-            return False
-        if self.registry.database_name_map or self.registry.table_name_map:
-            return False
-        return 1 <= len(self.registry.data_specs()) <= cfg.onepass_max_tables
-
-    def _write_table_slice(self, df: DataFrame, spec, db: str, tbl: str,
-                           batch_id: int | str | None = None) -> None:
-        from flink_cdc_multi_spark.functions.datetime_utils import dt_bucket
-        from flink_cdc_multi_spark.operators.routing import (
-            project_table,
-            publish_batch_parquet,
-        )
-
-        cfg = self.config
-        # project_table handles both payload shapes: struct (stream-level
-        # typed decode) short-circuits to payload.*, string gets from_json
-        typed = project_table(df, self.registry, spec, db, tbl)
-        typed = typed.withColumn("dt", dt_bucket(F.col("_ts")))
-        publish_batch_parquet(
-            typed, f"{cfg.sink_path}/{cfg.source_id}_{spec.output_name}",
-            batch_id,
-        )
-
     def _remove_if_dataless(self, spark: SparkSession, spec) -> None:
         """Delete a table dir that contains no data files (a zero-row
         parquet append commits only _SUCCESS; such a dir is unreadable).
@@ -520,7 +405,8 @@ class CDCPipeline:
         for r in ddl_rows:
             by_db[r["_db"]].append(r)
         for db, rows in by_db.items():
-            spec = self.registry.specs.get(f"{db}._{db}_ddl")
+            # lookup applies the db name map, as route_batch does for data
+            spec = self.registry.lookup(db, f"_{db}_ddl")
             if spec is None:
                 continue  # registry built without DDL tables
             data = [tuple(r[f.name] for f in spec.payload_schema.fields) for r in rows]
@@ -531,116 +417,101 @@ class CDCPipeline:
                 batch_id,
             )
 
-    def _process_batch_onepass(self, envelope: DataFrame, batch_id: int) -> None:
-        """One Spark job per micro-batch: the control-plane aggregation
-        (counts, max ts, DDL slice, offset reduction, observed tables) rides
-        the data write job as ``df.observe`` metrics. At streaming cadence
-        the per-job floor — not the data — dominates the batch; the general
-        path below pays persist + summary-job + write-job, this pays one.
+    def process_batch(self, envelope: DataFrame, batch_id: int) -> None:
+        """One micro-batch: per-table publishes, DDL rows, offset file,
+        status file, stop decisions, maintenance compaction — in that order.
 
-        Unknown-table policy note: the fail check runs AFTER the known-table
-        appends (metrics exist only once the job ran). That stays inside the
-        pipeline's at-least-once contract — a failed batch is not committed
-        to the checkpoint and replays wholesale on restart, exactly like a
-        crash between two per-table writes on the general path."""
+        The control-plane reads (control_metric_aggs) ride the batch's
+        FIRST write job as an Observation: at streaming cadence the per-job
+        floor, not the data, dominates the batch. Job 1 publishes the lead
+        table (the first data table whose key is its own source identity)
+        from the observed batch, or is a noop write when nothing may be
+        written; route_batch then publishes every other observed identity
+        concurrently. Jobs per batch: one per active table, plus one when
+        the lead table had no rows.
+
+        Unknown-table policy note: the fail check runs AFTER job 1's
+        publish (the observed identities exist only once a job ran). That
+        stays inside the pipeline's at-least-once contract — a failed batch
+        is not committed to the checkpoint and replays wholesale on
+        restart, exactly like a crash between two per-table writes."""
         import time
 
         from pyspark.sql import Observation
 
         cfg = self.config
+        if self.controller.stop_requested:
+            # F1 suppression: after the stop signal is armed, drop all
+            # subsequent records (DelayedStopSignalProcessFunction.java:138-141)
+            return
         t = time.perf_counter()
+        if cfg.debug:
+            # W3/F7 debug print sink (FlinkCDCMulti.java:148-154)
+            envelope.show(20, truncate=False)
         # Column expressions are immutable/reusable — build the metric aggs
-        # once, not per batch (each F.* call is a Py4J round trip; at
-        # streaming cadence the driver-side plan construction is a
-        # measurable slice of the batch).
+        # once, not per batch (each F.* call is a Py4J round trip)
         if not hasattr(self, "_ctl_aggs"):
             self._ctl_aggs = control_metric_aggs(cfg.source_type)
-        data_specs = self.registry.data_specs()
-        # multi-table: K writers share the batch — persist it so the JSON
-        # decode runs once, not K times (at scale the decode is the data
-        # cost; the cache-write overhead only matters at the per-job floor)
-        cached = len(data_specs) > 1
+        # snapshot-only after completion: READs are dropped (F2) and a
+        # non-READ errors in the controller below — nothing is written
+        frozen = cfg.snapshot_only and self.controller.snapshot_complete
+        data_specs = [] if frozen else self.registry.data_specs()
+        # a name-mapped key is not the identity its rows arrive under, so
+        # the lead must be a spec its own identity looks up
+        lead = next(
+            (s for s in data_specs if self.registry.lookup(*_identity(s)) is s),
+            None,
+        )
+        # more than one job reads the batch (several tables, or a noop
+        # job 1 before route_batch): persist it so the JSON decode runs
+        # once (at scale the decode is the data cost)
+        cached = len(data_specs) > 1 or bool(data_specs and lead is None)
         if cached:
             envelope = envelope.persist()
         bkey = self._batch_key(batch_id)
         obs = Observation(f"ctl_{batch_id}")
         observed = envelope.observe(obs, *self._ctl_aggs)
-
-        def identity(spec) -> tuple[str, str]:
-            return tuple(spec.key.split(".", 1))
-
         try:
-            if len(data_specs) == 1:
-                db, tbl = identity(data_specs[0])
-                self._write_table_slice(observed, data_specs[0], db, tbl,
-                                        batch_id=bkey)
+            # 1. route + write (batch key → exactly-once publish: a
+            # replayed batch deletes its own prior files before
+            # re-promoting, so a crash anywhere between the data write
+            # and the checkpoint commit cannot duplicate rows)
+            if lead is not None:
+                publish_table(observed, self.registry, lead, *_identity(lead),
+                              cfg.sink_path, cfg.source_id, bkey)
             else:
-                # first write consumes the observed plan (materializes
-                # metrics); the rest run concurrently over the cached batch
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=min(8, len(data_specs))) as ex:
-                    futures = [
-                        ex.submit(
-                            self._write_table_slice,
-                            observed if i == 0 else envelope,
-                            spec,
-                            *identity(spec),
-                            batch_id=bkey,
-                        )
-                        for i, spec in enumerate(data_specs)
-                    ]
-                    for f in futures:
-                        f.result()
+                observed.write.format("noop").mode("overwrite").save()
             m = obs.get
-            t = self._mark("onepass_write", t)
-
-            # zero-row appends leave schema-less dirs (only _SUCCESS) that
-            # break readers and compaction; remove any dir this batch
-            # created empty so the sink matches the general path, which
-            # skips zero-count tables entirely
-            observed_ids = {(r["_db"], r["_tbl"]) for r in (m["tables"] or [])}
-            for spec in data_specs:
-                if identity(spec) not in observed_ids:
-                    self._remove_if_dataless(envelope.sparkSession, spec)
-
-            # unknown tables: adopt via the schema provider when enabled,
-            # then catch-up-write the adopted tables' rows from this batch
-            known = {identity(s) for s in data_specs}
-            unknowns = [
-                (r["_db"], r["_tbl"])
-                for r in (m["tables"] or [])
-                if (r["_db"], r["_tbl"]) not in known
-            ]
-            remaining = []
-            for db, tbl in unknowns:
-                spec = self._resolve_unknown_table(db, tbl)
-                if spec is not None:
-                    self.registry.add(spec)
-                    self._write_table_slice(envelope, spec, db, tbl,
-                                            batch_id=bkey)
-                else:
-                    remaining.append((db, tbl))
-            if remaining:
-                if self.registry.fail_on_unknown_tables:
-                    from flink_cdc_multi_spark.operators.routing import (
-                        UnknownTableError,
-                    )
-
-                    raise UnknownTableError(
-                        f"unknown tables: {remaining}; known: {sorted(self.registry.specs)}"
-                    )
-                LOG.warning("records for unknown tables skipped: %s", remaining)
+            # observed data identities → the set of their non-READ flags
+            seen: dict[tuple[str, str], set] = {}
+            for r in m["tables"] or []:
+                seen.setdefault((r["_db"], r["_tbl"]), set()).add(r["non_read"])
+            ddl_rows = m["ddl"] or []
+            if not frozen:
+                route_batch(
+                    envelope,
+                    self.registry,
+                    cfg.sink_path,
+                    cfg.source_id,
+                    resolve_unknown=self._resolve_unknown_table,
+                    counts=[k for k in seen if lead is None or k != _identity(lead)],
+                    batch_id=bkey,
+                )
+                if lead is not None and _identity(lead) not in seen:
+                    # job 1's empty publish may have left a schema-less dir
+                    self._remove_if_dataless(envelope.sparkSession, lead)
+                if ddl_rows:
+                    self._append_ddl_rows(envelope.sparkSession, ddl_rows,
+                                          batch_id=bkey)
         finally:
             if cached:
                 envelope.unpersist()
+        t = self._mark("route_write", t)
 
-        ddl_rows = m["ddl"] or []
-        if ddl_rows:
-            self._append_ddl_rows(envelope.sparkSession, ddl_rows,
-                                  batch_id=bkey)
-
-        # offset file AFTER data writes commit (at-least-once), monotone
+        # 2. offset file, AFTER data writes commit (at-least-once, ST4).
+        # Advance monotonically: a batch may carry lower offsets than an
+        # earlier one (file pickup order ≠ offset order), and the stored
+        # offset must never regress or resume would over-replay.
         if self.offset_store is not None:
             offset = _offset_str(m["offset"], cfg.source_type)
             if offset is not None:
@@ -648,10 +519,19 @@ class CDCPipeline:
                 if prev is None or offset_greater(offset, prev, cfg.source_type):
                     self.offset_store.write(offset)
 
+        # 3. status file (ST8; checkpoint-complete == batch end)
         self.status.update(m["n"], m["max_ts"])
         self.status.flush()
 
+        # 4. stop decisions take effect before the next batch
         before = self.controller.to_state()
+        self.controller.on_batch_tables(
+            [
+                (f"{db}.{tbl}", True in flags)
+                for (db, tbl), flags in seen.items()
+                if flags != {None}
+            ]
+        )
         self.controller.on_ddl_rows(
             [
                 {"_db": r["_db"], "_ddl": r["_ddl"], "_ddl_tbl": r["_ddl_tbl"]}
@@ -665,116 +545,22 @@ class CDCPipeline:
         t = self._mark("offset_status_ctl", t)
         self.batches_processed += 1
 
+        # 5. maintenance compaction every N batches (rebuild improvement
+        # over the reference's roll-on-checkpoint-and-never-compact sink;
+        # PERF.md names small-file buildup the antidote target). Runs
+        # AFTER the offset commit: the replay window on resume starts at
+        # the stored offset, so compacting away tombstones/old images
+        # below it can never resurrect a row. Exactly-once under a
+        # crash between compaction and the epoch's checkpoint commit
+        # is preserved by the folded-key marker (see run_compaction):
+        # the replayed batch sees its own key in the marker and skips
+        # its publish instead of re-promoting rows compaction folded.
         if (
             cfg.compact_every_n_batches
             and cfg.table_key_columns
             and self.batches_processed % cfg.compact_every_n_batches == 0
         ):
             self.run_compaction(envelope.sparkSession, folded_key=bkey)
-
-    def process_batch(self, envelope: DataFrame, batch_id: int) -> None:
-        import time
-
-        cfg = self.config
-        if self.controller.stop_requested:
-            # F1 suppression: after the stop signal is armed, drop all
-            # subsequent records (DelayedStopSignalProcessFunction.java:138-141)
-            return
-        if self._onepass_eligible():
-            return self._process_batch_onepass(envelope, batch_id)
-        t = time.perf_counter()
-        envelope = envelope.persist()
-        try:
-            if cfg.debug:
-                # W3/F7 debug print sink (FlinkCDCMulti.java:148-154)
-                envelope.show(20, truncate=False)
-            # 4a. control-plane reads: ONE grouped pass over the cached
-            # batch (counts + ST1 flags + max ts + DDL slice + offset
-            # reduction — previously five jobs, each paying the scheduling
-            # floor at streaming cadence)
-            summary = batch_summary(envelope, cfg.source_type)
-            t = self._mark("summary", t)
-            counts = {(r["_db"], r["_tbl"]): r["n"] for r in summary}
-            ddl_rows = [
-                {"_db": r["_db"], "_ddl": d["_ddl"], "_ddl_tbl": d["_ddl_tbl"]}
-                for r in summary
-                for d in r["ddl"]
-            ]
-            n_rows = sum(r["n"] for r in summary)
-            ts_vals = [r["max_ts"] for r in summary if r["max_ts"] is not None]
-            max_ts = max(ts_vals) if ts_vals else None
-            table_ops = [
-                (f"{r['_db']}.{r['_tbl']}", bool(r["non_read"]))
-                for r in summary
-                if r["non_read"] is not None
-            ]
-
-            # snapshot-only: drop post-completion READs (F2); error non-READ
-            data = envelope
-            if cfg.snapshot_only and self.controller.snapshot_complete:
-                data = envelope.filter(F.col("_op") == OP_READ).limit(0)
-                counts = None  # counts describe the unfiltered batch
-
-            # 1. route + write (batch_id → exactly-once publish: a
-            # replayed batch deletes its own prior files before
-            # re-promoting, so a crash anywhere between the data write
-            # and the checkpoint commit cannot duplicate rows)
-            route_batch(
-                data,
-                self.registry,
-                cfg.sink_path,
-                cfg.source_id,
-                resolve_unknown=self._resolve_unknown_table,
-                counts=counts,
-                batch_id=self._batch_key(batch_id),
-            )
-            t = self._mark("route_write", t)
-
-            # 2. offset file, AFTER data writes commit (at-least-once, ST4).
-            # Advance monotonically: a batch may carry lower offsets than an
-            # earlier one (file pickup order ≠ offset order), and the stored
-            # offset must never regress or resume would over-replay.
-            if self.offset_store is not None:
-                offset = summary_offset(summary, cfg.source_type)
-                if offset is not None:
-                    prev = self.offset_store.read()
-                    if prev is None or offset_greater(offset, prev, cfg.source_type):
-                        self.offset_store.write(offset)
-
-            # 3. status file (ST8; checkpoint-complete == batch end)
-            self.status.update(n_rows, max_ts)
-            self.status.flush()
-
-            # 4b. stop decisions take effect before the next batch
-            before = self.controller.to_state()
-            self.controller.on_batch_tables(table_ops)
-            self.controller.on_ddl_rows(ddl_rows)
-            if self.controller_path and self.controller.to_state() != before:
-                fsio.write_text_atomic(
-                    self.controller_path, json.dumps(self.controller.to_state())
-                )
-            t = self._mark("offset_status_ctl", t)
-            self.batches_processed += 1
-
-            # 5. maintenance compaction every N batches (rebuild improvement
-            # over the reference's roll-on-checkpoint-and-never-compact sink;
-            # PERF.md names small-file buildup the antidote target). Runs
-            # AFTER the offset commit: the replay window on resume starts at
-            # the stored offset, so compacting away tombstones/old images
-            # below it can never resurrect a row. Exactly-once under a
-            # crash between compaction and the epoch's checkpoint commit
-            # is preserved by the folded-key marker (see run_compaction):
-            # the replayed batch sees its own key in the marker and skips
-            # its publish instead of re-promoting rows compaction folded.
-            if (
-                cfg.compact_every_n_batches
-                and cfg.table_key_columns
-                and self.batches_processed % cfg.compact_every_n_batches == 0
-            ):
-                self.run_compaction(envelope.sparkSession,
-                                    folded_key=self._batch_key(batch_id))
-        finally:
-            envelope.unpersist()
 
     def compaction_order_cols(self) -> list:
         """Monotone per-source ordering over the columns the router KEEPS in

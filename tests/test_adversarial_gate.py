@@ -14,13 +14,15 @@ USING-join NULL drops in funnel/retention, Java-vs-RE2 `$` in priority).
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from check_oracle import check_one, oracle_connection  # noqa: E402
 
@@ -211,7 +213,7 @@ ADVERSARIAL_QUERIES = [
 def adv_sf(tmp_path_factory):
     dst = str(tmp_path_factory.mktemp("adv") / "sf")
     subprocess.run(
-        [sys.executable, "/root/repo/tools/gen_adversarial_sf.py", SRC_SF, dst],
+        [sys.executable, os.path.join(ROOT, "tools", "gen_adversarial_sf.py"), SRC_SF, dst],
         check=True,
         capture_output=True,
         timeout=300,

@@ -3,10 +3,11 @@ the flag logic alone — the recheck wiring is exercised by bench runs, a
 synthetic-load test would be overkill per the verdict's own scoping.
 Plus the sf1 scaling row's error text when its child process fails."""
 
+import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from bench import ambient_disagreement

@@ -2,6 +2,7 @@
 CLI entry point (FlinkCDCMulti.java:393-415)."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -10,6 +11,8 @@ import pytest
 from conftest import make_mysql_row
 
 from flink_cdc_multi_spark.sources.mongo import compare_versions, resolve_mongo_startup
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # -- version compare + startup matrix (MongoDBStreamer.java:145-231) --------
 
@@ -180,7 +183,7 @@ def test_cli_validate_and_run(tmp_path):
         [sys.executable, "-m", "flink_cdc_multi_spark", "-c", str(tmp_path / "job.json"), *extra],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=300,
     )
     v = env_run("--validate", "--name", "SMOKE")
@@ -332,7 +335,7 @@ def test_cli_mongodb_sample_file_registry(tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "flink_cdc_multi_spark", "-c",
          str(tmp_path / "job.json"), "--validate"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=ROOT, timeout=300,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "appdb.users" in r.stdout
@@ -344,7 +347,7 @@ def test_cli_mongodb_sample_file_registry(tmp_path):
     r2 = subprocess.run(
         [sys.executable, "-m", "flink_cdc_multi_spark", "-c",
          str(tmp_path / "job2.json"), "--validate"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=ROOT, timeout=300,
     )
     assert r2.returncode != 0
     assert "mongodb.sample.file" in r2.stderr
@@ -393,7 +396,7 @@ EXAMPLES = [
 def test_example_configs_load_and_validate(fname, stype, n_tables):
     from flink_cdc_multi_spark.config import JobConfig
 
-    cfg = JobConfig.load(f"/root/repo/example-configs/{fname}")
+    cfg = JobConfig.load(os.path.join(ROOT, "example-configs", fname))
     assert cfg.source_type == stype
     assert len(cfg.source_table_list) == n_tables
     assert cfg.sink_path and cfg.source_id
@@ -414,7 +417,7 @@ def test_example_mongo_configs_pass_cli_validate():
         r = subprocess.run(
             [sys.executable, "-m", "flink_cdc_multi_spark",
              "-c", f"example-configs/{fname}", "--validate"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
+            capture_output=True, text=True, cwd=ROOT, timeout=300,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         assert "table:" in r.stdout
@@ -449,15 +452,15 @@ def test_deploy_example_configs_validate(tmp_path):
 
     r = subprocess.run(
         [sys.executable, "tools/gen_example_catalog.py"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=120,
+        capture_output=True, text=True, cwd=ROOT, timeout=120,
     )
     assert r.returncode == 0, r.stderr[-1000:]
-    configs = sorted(glob.glob("/root/repo/example-configs/deploy/*.json"))
+    configs = sorted(glob.glob(os.path.join(ROOT, "example-configs", "deploy", "*.json")))
     assert len(configs) == 4
     for cfg in configs:
         v = subprocess.run(
             [sys.executable, "-m", "flink_cdc_multi_spark", "-c", cfg, "--validate"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
+            capture_output=True, text=True, cwd=ROOT, timeout=300,
         )
         assert v.returncode == 0, (cfg, v.stderr[-2000:])
         assert "table:" in v.stdout, cfg
@@ -488,7 +491,7 @@ def test_transport_exclusivity(tmp_path):
         r = subprocess.run(
             [sys.executable, "-m", "flink_cdc_multi_spark",
              "-c", str(tmp_path / "job.json")],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300,
+            capture_output=True, text=True, cwd=ROOT, timeout=300,
         )
         assert r.returncode != 0
         assert "transport" in (r.stderr + r.stdout)

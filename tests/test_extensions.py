@@ -3668,3 +3668,34 @@ def test_cms_estimate_dominates_truth(spark):
     }
     exact = sum(est[t] == truth[t] for t in truth)
     assert exact >= len(truth) * 0.8  # collisions are rare at d*w=1024
+
+
+def test_own_index_dirs_removed_at_exit(tmp_path):
+    """A per-process index artifact dir (fcm_annidx_<pid>_*) is removed when
+    the process that built it exits; another process's dir is left alone.
+    Spark-free: the build path only marks the dir, the exit hook removes it."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    other = tmp_path / "fcm_annidx_1_keep"
+    other.mkdir()
+    code = (
+        "import os, sys, tempfile\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "import flink_cdc_multi_spark.plans.extensions as E\n"
+        "p = E._own_tmp_dir(os.path.join(tempfile.gettempdir(),"
+        " f'fcm_annidx_{os.getpid()}_t'))\n"
+        "os.makedirs(os.path.join(p, 'cells'))\n"
+        "print(p)\n"
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=120,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    built = r.stdout.strip().splitlines()[-1]
+    assert built.startswith(str(tmp_path)) and "fcm_annidx_" in built
+    assert not os.path.exists(built)
+    assert other.is_dir()

@@ -566,27 +566,11 @@ def test_maintenance_compaction_every_n_batches(spark, tmp_path):
     assert pipe.offset_store.read() == "mysql-bin.000001,40"
 
 
-# -- one-pass (observed-metrics) batch path ---------------------------------
-
-
-def test_onepass_eligibility_gates(tmp_path):
-    assert _pipeline(tmp_path)._onepass_eligible() is True
-    assert _pipeline(tmp_path, **{"snapshot.only": "true"})._onepass_eligible() is False
-    assert _pipeline(tmp_path, **{"debug": "true"})._onepass_eligible() is False
-    assert (
-        _pipeline(tmp_path, **{"streaming.onepass.max.tables": 0})._onepass_eligible()
-        is False
-    )
-    many = {("testdb", f"t{i}"): USERS for i in range(17)}
-    assert _pipeline(tmp_path, tables=many)._onepass_eligible() is False
-    mapped = _pipeline(tmp_path)
-    mapped.registry.table_name_map["testdb.users"] = "users_v2"
-    assert mapped._onepass_eligible() is False
+# -- the batch body (control plane observed on the first write job) ---------
 
 
 def test_onepass_unknown_table_skip_policy(spark, tmp_path):
     pipe = _pipeline(tmp_path, **{"fail.on.unknown.tables": "false"})
-    assert pipe._onepass_eligible()
     feed = _feed(
         tmp_path,
         "f1.json",
@@ -629,7 +613,6 @@ def test_onepass_multi_table_batch(spark, tmp_path):
     pipe = _pipeline(
         tmp_path, tables={("testdb", "users"): USERS, ("testdb", "orders"): orders}
     )
-    assert pipe._onepass_eligible()
     feed = _feed(
         tmp_path,
         "f1.json",
@@ -653,9 +636,9 @@ def test_onepass_multi_table_batch(spark, tmp_path):
     assert pipe.offset_store.read() == "mysql-bin.000001,30"
 
 
-def test_onepass_matches_general_path(spark, tmp_path):
-    """Equivalence: the one-job observed-metrics path and the two-pass
-    general path must land identical table contents, offsets, and status."""
+def test_mixed_feed_lands_exact_rows(spark, tmp_path):
+    """A READ, an insert, an update, a delete and a DDL in one batch land
+    exactly these rows, offset and status (every column of both tables)."""
     lines = [
         make_mysql_row(op="r", after={"id": 1, "v": "a"}, snapshot="true", pos=1),
         make_mysql_row(op="c", after={"id": 2, "v": "b"}, pos=100, ts_ms=1700000001000),
@@ -665,85 +648,58 @@ def test_onepass_matches_general_path(spark, tmp_path):
                        pos=300, ts_ms=1700000003000),
         make_mysql_ddl(ddl="CREATE INDEX i ON users (id)", pos=400),
     ]
-    results = {}
-    for label, overrides in [
-        ("onepass", {}),
-        ("general", {"streaming.onepass.max.tables": 0}),
-    ]:
-        sub = tmp_path / label
-        sub.mkdir()
-        pipe = _pipeline(sub, **overrides)
-        feed = _feed(sub, "f1.json", lines)
-        query = pipe.start(spark, feed, str(sub / "ckpt"))
-        query.processAllAvailable()
-        query.stop()
-        users = spark.read.parquet(str(sub / "sink" / "s1_testdb__users"))
-        ddl_out = spark.read.parquet(str(sub / "sink" / "s1_testdb___testdb_ddl"))
-        results[label] = {
-            "users": sorted(
-                (r["id"], r["v"], r["_op"], r["_ts"], r["_binlog_pos_internal"])
-                for r in users.collect()
-            ),
-            "ddl": sorted((r["_ddl"], r["_ts"]) for r in ddl_out.collect()),
-            "offset": pipe.offset_store.read(),
-            "status": (
-                json.loads((sub / "store" / "s1_status.json").read_text())["record_count"],
-                json.loads((sub / "store" / "s1_status.json").read_text())[
-                    "last_event_timestamp"
-                ],
-            ),
-        }
-    assert results["onepass"] == results["general"]
+    pipe = _pipeline(tmp_path)
+    query = pipe.start(spark, _feed(tmp_path, "f1.json", lines), str(tmp_path / "ckpt"))
+    query.processAllAvailable()
+    query.stop()
+
+    def rows(name):
+        df = spark.read.parquet(str(tmp_path / "sink" / name))
+        cols = sorted(df.columns)
+        return cols, sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
+
+    f, day = "mysql-bin.000001", "2023-11-14"
+    assert rows("s1_testdb__users") == (
+        ["_binlog_file_internal", "_binlog_pos_internal", "_op", "_ts", "dt", "id", "v"],
+        [
+            (f, "1", "READ", "1700000000000", day, "1", "a"),
+            (f, "100", "INSERT", "1700000001000", day, "2", "b"),
+            (f, "200", "UPDATE", "1700000002000", day, "2", "c"),
+            (f, "300", "DELETE", "1700000003000", day, "1", "a"),
+        ],
+    )
+    assert rows("s1_testdb___testdb_ddl") == (
+        ["_binlog_file", "_binlog_pos_end", "_ddl", "_ddl_tbl", "_ts", "dt"],
+        [(f, "400", "CREATE INDEX i ON users (id)", "users", "1700000000000", day)],
+    )
+    assert pipe.offset_store.read() == "mysql-bin.000001,400"
+    status = json.loads((tmp_path / "store" / "s1_status.json").read_text())
+    assert (status["record_count"], status["last_event_timestamp"]) == (5, 1700000003000)
 
 
-@pytest.mark.parametrize("n_tables", [24, 64])
-def test_onepass_matches_general_path_many_tables(spark, tmp_path, n_tables):
-    """Result-equivalence at the widths the r6 crossover sweep measured
-    (PERF.md "Streaming ingestion"): the one-pass path forced ABOVE the
-    shipped 16-table default must still land identical tables + offset +
-    status as the general path — the default is a perf knob, not a
-    correctness boundary."""
-    lines = [
-        make_mysql_row(
-            op="c",
-            table=f"t{i % n_tables}",
-            after={"id": i, "v": f"v{i}"},
-            pos=100 + i,
-            ts_ms=1700000000000 + i,
-        )
-        for i in range(2 * n_tables)
-    ]
-    tables = {("testdb", f"t{i}"): USERS for i in range(n_tables)}
-    results = {}
-    for label, overrides in [
-        ("onepass", {"streaming.onepass.max.tables": 999}),
-        ("general", {"streaming.onepass.max.tables": 0}),
-    ]:
-        sub = tmp_path / label
-        sub.mkdir()
-        pipe = _pipeline(sub, tables=tables, **overrides)
-        feed = _feed(sub, "f1.json", lines)
-        query = pipe.start(spark, feed, str(sub / "ckpt"))
-        query.processAllAvailable()
-        query.stop()
-        per_table = {}
-        for i in range(n_tables):
-            rows = spark.read.parquet(str(sub / "sink" / f"s1_testdb__t{i}"))
-            per_table[i] = sorted(
-                (r["id"], r["v"], r["_op"], r["_binlog_pos_internal"])
-                for r in rows.collect()
-            )
-        results[label] = {
-            "tables": per_table,
-            "offset": pipe.offset_store.read(),
-            "onepass_used": pipe._onepass_eligible(),
-        }
-    assert results["onepass"]["onepass_used"] is True
-    assert results["general"]["onepass_used"] is False
-    assert results["onepass"]["tables"] == results["general"]["tables"]
-    assert results["onepass"]["offset"] == results["general"]["offset"]
-    # every table got its 2 rows on both paths
-    assert all(len(v) == 2 for v in results["onepass"]["tables"].values())
+def test_jobs_per_batch(spark, tmp_path):
+    """One Spark job per active table: the control plane rides the first
+    write. 1 table → 1 job; 24 tables with 2 active, the first registered
+    among them → 2 jobs."""
+    from flink_cdc_multi_spark.sources.debezium_json import decode_raw
+
+    def jobs(sub, tables, lines):
+        pipe = _pipeline(tmp_path / sub, tables=tables)
+        env = decode_raw(spark.createDataFrame([(x,) for x in lines], "value string"),
+                         "mysql")
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        j0 = dag.nextJobId()
+        pipe.process_batch(env, 0)
+        return dag.nextJobId() - j0
+
+    one = [make_mysql_row(op="c", after={"id": 1, "v": "a"}, pos=10)]
+    assert jobs("one", None, one) == 1
+    many = {("testdb", f"t{i}"): USERS for i in range(24)}
+    two = [make_mysql_row(table=t, op="c", after={"id": i, "v": "a"}, pos=10 + i)
+           for i, t in enumerate(["t0", "t7", "t0"])]
+    assert jobs("many", many, two) == 2
+    assert (tmp_path / "many" / "sink" / "s1_testdb__t7").exists()
+    assert not (tmp_path / "many" / "sink" / "s1_testdb__t1").exists()
 
 
 def test_schema_change_reversion_lifecycle(spark, tmp_path):
@@ -808,7 +764,7 @@ def test_schema_change_reversion_lifecycle(spark, tmp_path):
 
 
 def test_mongo_stream_onepass_end_to_end(spark, tmp_path):
-    """MongoDB source through the streaming one-pass path: change-stream
+    """MongoDB source through the streaming batch body: change-stream
     shaped lines → typed per-collection parquet with _id/_txn_op_index
     meta, timestamp offset store, resume semantics."""
     import json as _json
@@ -844,7 +800,6 @@ def test_mongo_stream_onepass_end_to_end(spark, tmp_path):
         "mongodb", {("shop", "items"): docs_schema}, with_ddl_tables=False
     )
     pipe = CDCPipeline(cfg, reg)
-    assert pipe._onepass_eligible()
     feed = _feed(
         tmp_path,
         "f1.json",
@@ -920,13 +875,12 @@ def test_start_recovers_crashed_compaction_swap(spark, tmp_path):
 
 def test_onepass_no_empty_dir_for_inactive_table(spark, tmp_path):
     """A registered table with no rows in the batch must not leave a
-    schema-less (_SUCCESS-only) parquet dir behind — parity with the
-    general path, which skips zero-count tables."""
+    schema-less (_SUCCESS-only) parquet dir behind — here the first
+    registered table, which the batch's first write job publishes empty."""
     orders = T.StructType([T.StructField("oid", T.LongType())])
     pipe = _pipeline(
-        tmp_path, tables={("testdb", "users"): USERS, ("testdb", "orders"): orders}
+        tmp_path, tables={("testdb", "orders"): orders, ("testdb", "users"): USERS}
     )
-    assert pipe._onepass_eligible()
     feed = _feed(
         tmp_path,
         "f1.json",

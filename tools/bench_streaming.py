@@ -3,12 +3,9 @@ convert the sf events table into a Debezium-JSON feed, stream it through
 the full CDC pipeline (decode → route → per-table parquet + offset +
 status), and report rows/sec + per-trigger commit behavior.
 
-Usage: python tools/bench_streaming.py [sf_dir] [n_files] [n_tables] [onepass_max]
+Usage: python tools/bench_streaming.py [sf_dir] [n_files] [n_tables]
 Prints one JSON line. n_tables > 1 shards events across that many tables
 (round-robin on event_id) to exercise the multi-table write path.
-onepass_max overrides streaming.onepass.max.tables (0 forces the general
-path, a large value forces one-pass) — used by the crossover sweep in
-PERF.md.
 
 Stateful-sketch mode (r17, VERDICT r16 item 2):
 
@@ -32,7 +29,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
@@ -142,9 +140,6 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 8
     n_tables = int(sys.argv[3]) if len(sys.argv) > 3 else 1
-    # default None = do not override streaming.onepass.max.tables, so the
-    # tool measures the SHIPPED default path (16 since the r5 sweep)
-    onepass_max = int(sys.argv[4]) if len(sys.argv) > 4 else None
 
     work = tempfile.mkdtemp(prefix="cdc_stream_bench_")
     feed = os.path.join(work, "feed")
@@ -195,8 +190,6 @@ def main() -> None:
             # analogue: continuous processing; checkpoints don't throttle).
             # maxFilesPerTrigger=1 still forces n_files separate commits.
             "checkpoint.interval": 0,
-            **({"streaming.onepass.max.tables": onepass_max}
-               if onepass_max is not None else {}),
         }
     )
     # Best-of-2 (same policy as bench.py): one-shot streaming runs carry
@@ -246,7 +239,6 @@ def main() -> None:
             "wall_sec": round(wall, 2),
             "batches": pipe.batches_processed,
             "n_tables": n_tables,
-            "onepass": pipe._onepass_eligible(),
             "stage_seconds": {k: round(v, 3) for k, v in pipe.stage_seconds.items()},
             "engine_ms": engine_ms,
             "final_offset": offset,

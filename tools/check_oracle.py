@@ -11,12 +11,14 @@ tools/gen_adversarial_sf.py.
 
 from __future__ import annotations
 
+import os
 import sys
 from datetime import datetime, timezone
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from flink_cdc_multi_spark import TABLES  # noqa: E402
 from flink_cdc_multi_spark.session import get_spark  # noqa: E402

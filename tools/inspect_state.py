@@ -24,7 +24,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from flink_cdc_multi_spark.sources.offsets import validate_offset  # noqa: E402
 

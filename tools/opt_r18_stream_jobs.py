@@ -1,11 +1,12 @@
-"""r18 wave 6 probe: count Spark JOBS per streaming micro-batch
-(VERDICT r17 item 6 — at streaming cadence the per-job floor dominates,
-so the lever is job count, not per-row cost).
+"""Count Spark JOBS per streaming micro-batch: at streaming cadence the
+per-job floor dominates, so the lever is job count, not per-row cost.
 
-Monkeypatches CDCPipeline.process_batch with a job-group wrapper and
-streams a small Debezium feed through the shipped pipeline (single
-table = the onepass path; pass n_tables>1 for the multi-table path),
-printing jobs-per-batch and the pipeline's stage_seconds breakdown.
+Wraps CDCPipeline.process_batch with a counter over the DAG scheduler's
+global job id and streams a small Debezium feed through the shipped
+pipeline, spreading events round-robin over n_tables tables, then prints
+jobs-per-batch and the pipeline's stage_seconds breakdown. Every table
+is active in every batch, so the expected count is n_tables (one publish
+job per active table; the control plane rides the first).
 
     python tools/opt_r18_stream_jobs.py [n_files] [n_tables]
 """
@@ -18,7 +19,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
@@ -69,9 +71,9 @@ def main() -> None:
     orig = CDCPipeline.process_batch
 
     def wrapped(self, env, bid):
-        # count via the GLOBAL job-id counter: the multi-table path
-        # submits writes from pool threads, which don't inherit a job
-        # group — the group-scoped count is blind there
+        # count via the GLOBAL job-id counter: route_batch submits
+        # writes from pool threads, which don't inherit a job group —
+        # the group-scoped count is blind there
         sc = env.sparkSession.sparkContext
         j0 = sc._jsc.sc().dagScheduler().nextJobId()
         t0 = time.perf_counter()

@@ -13,10 +13,12 @@ from __future__ import annotations
 
 import io
 import re
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from flink_cdc_multi_spark.plans import ALL_ORACLE_SQL, ALL_QUERIES  # noqa: E402
 from flink_cdc_multi_spark.session import get_spark  # noqa: E402
@@ -112,7 +114,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("plan-report", master="local[4]", shuffle_partitions=4)
     text = generate(spark, sf_dir)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(text)
     print(f"wrote PLANS.md ({len(text)} chars)")
 
